@@ -118,7 +118,11 @@ def per_query_lines(times: dict[str, float], max_chars: int = 600) -> list[str]:
     regression-sensitive queries.  Pure function; unit-tested."""
     names = sorted(times, key=lambda n: (times[n], n))
     chunks: list[dict[str, float]] = [{}]
-    probe = {"metric": "per_query_sec", "part": 0, "of": 0, "queries": {}}
+    # size against the WIDEST part/of indices a line can carry: each chunk
+    # holds at least one query, so there are never more chunks than names
+    widest = 10 ** len(str(max(1, len(names)))) - 1
+    probe = {"metric": "per_query_sec", "part": widest, "of": widest,
+             "queries": {}}
     for n in names:
         cand = dict(chunks[-1])
         cand[n] = times[n]

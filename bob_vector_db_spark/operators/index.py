@@ -27,12 +27,20 @@ that Spark/Hadoop readers skip when scanning the collection itself:
 Scale design: the build is ONE full pass over the stored vectors (train on
 a capped driver sample, assign/encode distributed via Arrow-batched BLAS,
 one ``repartition(list_id)`` shuffle to cluster the inverted lists); a
-search reads ONLY the probed lists — the probe ids are computed driver-side
-from the O(n_lists × dim) centroids and folded into the scan as a STATIC
-``list_id IN (...)`` filter, which Catalyst turns into partition pruning on
-the hive layout (asserted in tests/test_plans.py).  Centroids and codebooks
-persist as parquet rather than JSON in the meta sidecar: at 4096 lists ×
-4096 dims they are 100+ MB of floats — table data, not config.
+search reads ONLY the probed lists.  Centroids and codebooks persist as
+parquet rather than JSON in the meta sidecar: at 4096 lists × 4096 dims
+they are 100+ MB of floats — table data, not config — but a search reads
+them with pyarrow on the driver, not with Spark jobs.
+
+Query side, read once: a search makes ONE capped Arrow read of the
+caller's queries (the small-query contract — loud failure past
+``max_queries``).  From it the driver computes every query's probe lists
+and hands the stages three things: an Arrow-literal query frame (a
+``LocalTableScan`` — the caller's frame, however costly to evaluate, is
+never evaluated again), the exploded ``(qid, list_id)`` probe frame the
+candidate stages equi-join on, and the union of those lists as a STATIC
+``list_id IN (...)`` filter, which Catalyst turns into partition pruning
+on the hive layout (asserted in tests/test_plans.py).  No probe UDF runs.
 
 Staleness: the build records the collection's data version
 (operators.upsert.collection_version, bumped by every mutation); a search
@@ -47,6 +55,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -105,15 +114,6 @@ def index_is_fresh(root: str, collection: str, vector_name: str,
     if imeta is None:
         return False
     return int(imeta["built_version"]) == collection_version(root, collection)
-
-
-def drop_vector_index(root: str, collection: str, vector_name: str,
-                      tenant: str | None = None) -> bool:
-    path = index_path(root, collection, vector_name, tenant)
-    if not os.path.isdir(path):
-        return False
-    shutil.rmtree(path)
-    return True
 
 
 def _resolve_vector_name(meta: dict, collection: str,
@@ -641,7 +641,6 @@ def _refresh_literal(spark: SparkSession, root: str, collection: str,
     the whole delta id set is executed by the live-check and again by
     the append (the rows carry full vectors, so collecting them is not
     an option), and the masks are literal rows."""
-    from .localframe import local_frame  # noqa: PLC0415
     from .upsert import read_rows_for_ids  # noqa: PLC0415
 
     up = sorted({r["id"] for r in classified if r["op"] == "upsert"})
@@ -752,7 +751,7 @@ def refresh_vector_index(spark: SparkSession, root: str, collection: str,
             # pool with the same expression the build used, assign with
             # the STORED centroids (and for ivf_mv_sq encode with the
             # STORED sq params) — no retraining on a delta
-            cents = _load_centroids(spark, ipath)
+            cents = _load_centroids(ipath)
             pooled = (data.withColumn("_pooled",
                                       vector.mean_pool(F.col(vn)))
                       .filter(F.col("_pooled").isNotNull())
@@ -766,7 +765,7 @@ def refresh_vector_index(spark: SparkSession, root: str, collection: str,
                 assigned = assigned.select(id_col, "codes", geng,
                                            "list_id")
             elif kind == "ivf_mv_pq":
-                books = _load_codebooks(spark, ipath)
+                books = _load_codebooks(ipath)
                 assigned = quantize.pq_encode(assigned, books,
                                               vec_col="_pooled")
                 assigned = assigned.select(id_col, "pq_codes", geng,
@@ -787,10 +786,10 @@ def refresh_vector_index(spark: SparkSession, root: str, collection: str,
              .parquet(data_dir))
             return
         if kind in ("ivf", "ivf_pq", "ivf_sq", "ivf_bq"):
-            cents = _load_centroids(spark, ipath)
+            cents = _load_centroids(ipath)
             data = quantize.ivf_assign(data, cents, vec_col=vn)
         if kind in ("pq", "ivf_pq"):
-            books = _load_codebooks(spark, ipath)
+            books = _load_codebooks(ipath)
             data = quantize.pq_encode(data, books, vec_col=vn)
         if kind == "ivf_sq":
             # encode with the STORED params — retraining them on a delta
@@ -890,47 +889,105 @@ def refresh_all_indexes(spark: SparkSession, root: str,
     return out
 
 
-def _load_centroids(spark: SparkSession, ipath: str):
+def _load_centroids(ipath: str):
+    """(n_lists, dim) float64 centroids, ordered by list_id.  The sidecar
+    is O(n_lists × dim) on the local store path, so it is read with
+    pyarrow on the driver — a Spark read costs a schema-inference job
+    plus a collect job per call."""
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    tbl = pq.read_table(os.path.join(ipath, "centroids")).sort_by("list_id")
+    return _stack_rows(tbl.column("centroid"))
+
+
+def _load_codebooks(ipath: str):
+    """Per-subspace (ksub, dsub) float64 codebooks, read like
+    :func:`_load_centroids`."""
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    tbl = pq.read_table(os.path.join(ipath, "codebooks")).sort_by(
+        [("subspace", "ascending"), ("code", "ascending")])
+    sub = tbl.column("subspace").to_numpy()
+    flat = _stack_rows(tbl.column("centroid"))
+    return [flat[sub == j] for j in range(int(sub.max()) + 1)]
+
+
+def _stack_rows(col):
+    """A non-NULL equal-width list column as a 2-D float64 array."""
     import numpy as np  # noqa: PLC0415
 
-    rows = (spark.read.parquet(os.path.join(ipath, "centroids"))
-            .orderBy("list_id").collect())
-    return np.array([r["centroid"] for r in rows], dtype=np.float64)
+    vals = col.combine_chunks().flatten().to_numpy(zero_copy_only=False)
+    return np.asarray(vals, dtype=np.float64).reshape(len(col), -1)
 
 
-def _load_codebooks(spark: SparkSession, ipath: str):
-    import numpy as np  # noqa: PLC0415
+class _QuerySide(NamedTuple):
+    """The caller's queries, read ONCE (see :func:`_read_query_side`)."""
 
-    rows = (spark.read.parquet(os.path.join(ipath, "codebooks"))
-            .orderBy("subspace", "code").collect())
-    m = max(r["subspace"] for r in rows) + 1
-    return [
-        np.array([r["centroid"] for r in rows if r["subspace"] == j],
-                 dtype=np.float64)
-        for j in range(m)
-    ]
+    frame: DataFrame                # Arrow literal: qid, qvec[, _qpool]
+    probes: DataFrame | None        # (qid, list_id); None without lists
+    lists: list[int] | None         # the static ``list_id IN`` prune set
+    table: object                   # the pyarrow.Table behind ``frame``
 
 
-def _probed_list_filter(queries: DataFrame, query_vec: str, centroids,
-                        n_probe: int, max_queries: int) -> list[int]:
-    """Driver-side union of every query's probe lists — the STATIC prune
-    set.  Bounded by the kNN small-query-side contract (loud failure past
-    ``max_queries``, like knn_join_vectorized); uses the same arithmetic as
-    the probe UDF so the static set always covers the dynamic join."""
-    vecs = [r[0] for r in
-            queries.select(query_vec).limit(max_queries + 1).collect()]
-    if len(vecs) > max_queries:
+def _read_query_side(spark: SparkSession, queries: DataFrame, query_id: str,
+                     query_vec: str, max_queries: int, cents=None,
+                     n_probe: int = 1, pooled: bool = False,
+                     per_token: bool = False) -> _QuerySide:
+    """ONE capped ``toArrow()`` of the caller's ``(query_id, query_vec)``
+    — renamed ``(qid, qvec)``, plus the mean-pooled ``_qpool`` for the
+    multivector kinds — that every later search stage uses.
+
+    The query side is a small driver-bounded input (the kNN small-query
+    contract: a loud failure past ``max_queries``, before any artifact
+    scan), but the caller's frame can be arbitrarily expensive to
+    evaluate — a rows-form local relation runs a pickled-row Python
+    worker per execution, a parquet source a scan.  Reading it once and
+    handing the stages an Arrow-literal frame (a ``LocalTableScan``)
+    means no later action re-evaluates it.
+
+    With ``cents``, the per-query probe lists are computed here with
+    :func:`quantize.probe_list_ids` (the arithmetic the probe UDF uses)
+    and returned twice: as the exploded ``(qid, list_id)`` probe frame
+    the candidate stages equi-join on, and as the sorted union — the
+    STATIC prune set, so the partition filter always covers the join.
+    A NULL probe vector probes no lists.  Rows sharing a qid probe the
+    union of their lists.  ``per_token`` adds each token's own
+    ``n_probe`` lists to its query's pooled ones."""
+    import pyarrow as pa  # noqa: PLC0415
+
+    cols = [F.col(query_id).alias("qid"), F.col(query_vec).alias("qvec")]
+    if pooled:
+        cols.append(vector.mean_pool(F.col(query_vec)).alias("_qpool"))
+    sel = queries.select(*cols)
+    tbl = sel.limit(max_queries + 1).toArrow()
+    if tbl.num_rows > max_queries:
         raise ValueError(
-            f"search_indexed computes probe lists driver-side; got "
+            f"search_indexed reads the query side on the driver; got "
             f">{max_queries} queries — raise max_queries or batch the input")
-    # a NULL query vector probes no lists (it can never score in the
-    # join either — probe_lists_udf emits [] for it); np.asarray over a
-    # list containing None would crash the driver
-    vecs = [v for v in vecs if v is not None]
-    if not vecs:
-        return []
-    ids = quantize.probe_list_ids(vecs, centroids, n_probe)
-    return sorted({int(x) for row in ids for x in row})
+    frame = spark.createDataFrame(tbl, schema=sel.schema)
+    if cents is None:
+        return _QuerySide(frame, None, None, tbl)
+    qids = tbl.column("qid").to_pylist()
+    pvecs = tbl.column("_qpool" if pooled else "qvec").to_pylist()
+    ok = [i for i, v in enumerate(pvecs) if v is not None]
+    pairs: dict[tuple, None] = {}  # ordered set of (qid, list_id)
+    if per_token:
+        toks = tbl.column("qvec").to_pylist()
+        for i in ok:
+            vecs = [pvecs[i]] + [t for t in toks[i] or [] if t is not None]
+            for lid in quantize.probe_list_ids(vecs, cents, n_probe).ravel():
+                pairs[(qids[i], int(lid))] = None
+    elif ok:
+        ids = quantize.probe_list_ids([pvecs[i] for i in ok], cents, n_probe)
+        for i, row in zip(ok, ids):
+            for lid in row:
+                pairs[(qids[i], int(lid))] = None
+    ptbl = pa.table({
+        "qid": pa.array([q for q, _ in pairs], tbl.schema.field("qid").type),
+        "list_id": pa.array([lid for _, lid in pairs], pa.int32())})
+    probes = spark.createDataFrame(ptbl, schema=T.StructType([
+        sel.schema["qid"], T.StructField("list_id", T.IntegerType())]))
+    return _QuerySide(frame, probes, sorted({lid for _, lid in pairs}), tbl)
 
 
 def search_indexed(spark: SparkSession, root: str, collection: str,
@@ -961,10 +1018,13 @@ def search_indexed(spark: SparkSession, root: str, collection: str,
                  rescore — the Qdrant binary-quantization + rescore
                  pattern as a persisted artifact.
 
-    The probed lists arrive at the scan as a static ``list_id IN (...)``
-    filter → real partition pruning; a stale index raises unless
-    ``allow_stale`` (use ``search_collection(use_index='auto')`` for the
-    silent exact-scan fallback instead).
+    The queries are read ONCE on the driver (:func:`_read_query_side`;
+    more than ``max_queries`` of them raise, for every kind, before the
+    artifact is read) and the probed lists arrive at the scan as a
+    static ``list_id IN (...)`` filter → real partition pruning; a stale
+    index raises unless ``allow_stale`` (use
+    ``search_collection(use_index='auto')`` for the silent exact-scan
+    fallback instead).
 
     ``candidate_ids`` (one id column) narrows the search to those points
     — the FILTERED indexed search: the id set semi-joins the artifact
@@ -1053,36 +1113,37 @@ def search_indexed(spark: SparkSession, root: str, collection: str,
         # the exact scan — accuracy is only traded when the caller asks
         n_probe = int(imeta.get("n_lists", 1))
     ipath = index_path(root, collection, vector_name, tenant)
+    # every list-partitioned kind probes; kind='pq' scans all its codes
+    cents = None if kind == "pq" else _load_centroids(ipath)
+    qs = _read_query_side(spark, queries, query_id, query_vec, max_queries,
+                          cents, n_probe, pooled=kind in MV_KINDS,
+                          per_token=probe_per_token)
+    q = qs.frame
     data = spark.read.parquet(os.path.join(ipath, "data"))
-
+    if qs.lists is not None:
+        data = data.filter(F.col("list_id").isin(qs.lists))
     if candidate_ids is not None:
+        # the filter's survivors semi-join INSIDE the probed (and masked)
+        # artifact partitions; no broadcast hint — AQE broadcasts a
+        # selective id set and shuffles a huge one
         _cands = candidate_ids.select(
             F.col(candidate_ids.columns[0]).cast("string")
             .alias("_flt_id")).distinct()
 
         def _narrow(df: DataFrame) -> DataFrame:
-            # the filter's survivors semi-join INSIDE the probed (and
-            # masked) artifact partitions; no broadcast hint — AQE
-            # broadcasts a selective id set and shuffles a huge one
             return df.join(
                 _cands, F.col(id_col).cast("string") == F.col("_flt_id"),
                 "left_semi")
     else:
         def _narrow(df: DataFrame) -> DataFrame:
             return df
+    pruned = _narrow(_apply_masks(spark, ipath, data, id_col).drop("gen"))
 
     if kind == "ivf":
-        cents = _load_centroids(spark, ipath)
-        probed = _probed_list_filter(
-            queries, query_vec, cents, n_probe, max_queries)
-        pruned = _narrow(_apply_masks(
-            spark, ipath, data.filter(F.col("list_id").isin(probed)), id_col
-        ).drop("gen"))
         return quantize.ivf_knn(
-            queries, pruned, cents, k=k, n_probe=n_probe,
-            query_id=query_id, query_vec=query_vec, corpus_id=id_col,
+            q, pruned, cents, k=k, n_probe=n_probe, corpus_id=id_col,
             corpus_vec=vector_name, exclude_self=exclude_self,
-            round_to=round_to, metric=metric)
+            round_to=round_to, metric=metric, probe_frame=qs.probes)
 
     if kind in MV_KINDS:
         # multivector search through the artifact: probe lists by the
@@ -1093,75 +1154,17 @@ def search_indexed(spark: SparkSession, root: str, collection: str,
         # from the collection; at full probe with a covering rerank the
         # answer equals the exact max-sim scan (the store_indexed_search
         # exactness pattern)
-        cents = _load_centroids(spark, ipath)
-        qp = queries.select(
-            F.col(query_id).alias("qid"),
-            F.col(query_vec).alias("_qvs"),
-            vector.mean_pool(F.col(query_vec)).alias("_qpool"))
-        # ONE capped collect serves both driver-side needs: the static
-        # probe set (non-NULL pooled vectors — a NULL pool, from a NULL
-        # list or a NULL token inside one, probes nothing, matching the
-        # exact fold) and the empty-token qid set; the cap fails loudly
-        # like _probed_list_filter
-        qcols = ["qid", "_qpool", F.size("_qvs").alias("_nt")]
-        if probe_per_token:
-            qcols.append("_qvs")  # token vectors ride the SAME collect
-        qinfo = qp.select(*qcols).limit(max_queries + 1).collect()
-        if len(qinfo) > max_queries:
-            raise ValueError(
-                f"search_indexed computes probe lists driver-side; got "
-                f">{max_queries} queries — raise max_queries or batch "
-                f"the input")
-        probe_frame = None
-        if probe_per_token:
-            # each token assigns its own n_probe lists; each query's
-            # probe set is the UNION (pooled ∪ per-token) — a superset
-            # of the pooled probe, so recall can only rise at equal
-            # n_probe.  The per-QID sets are computed DRIVER-side with
-            # the same probe_list_ids arithmetic as the candidate-stage
-            # UDF and handed down as an explicit exploded
-            # (qid, list_id) frame, so the static prune AND the
-            # candidate equi-join cover the same widened set (round 14,
-            # ADVICE r13 #1: widening only the static filter was a
-            # no-op — the stages re-derived pooled-only lists).  A NULL
-            # pool probes nothing, the pooled-probe policy.
-            pairs = []
-            for r in qinfo:
-                if r["_qpool"] is None:
-                    continue
-                vecs = [r["_qpool"]] + [t for t in (r["_qvs"] or [])
-                                        if t is not None]
-                lids = quantize.probe_list_ids(vecs, cents, n_probe)
-                pairs += [(r["qid"], lid) for lid in
-                          sorted({int(x) for row in lids for x in row})]
-            probed = sorted({lid for _, lid in pairs})
-            probe_frame = local_frame(spark, pairs, T.StructType([
-                T.StructField("qid", qp.schema["qid"].dataType),
-                T.StructField("list_id", T.IntegerType())]))
-        else:
-            pool_vecs = [r["_qpool"] for r in qinfo
-                         if r["_qpool"] is not None]
-            probed = (sorted({int(x) for row in quantize.probe_list_ids(
-                pool_vecs, cents, n_probe) for x in row})
-                if pool_vecs else [])
-        pruned = _narrow(_apply_masks(
-            spark, ipath, data.filter(F.col("list_id").isin(probed)), id_col
-        ).drop("gen"))
         if kind == "ivf_mv_pq":
             # ADC coarse stage over the pooled PQ codes — the ONE ADC
             # implementation, with the pooled query building the LUT
-            cands = _adc_candidates(
-                pruned, qp, "qid", "_qpool",
-                _load_codebooks(spark, ipath), cents, n_probe, id_col,
-                n_cand, exclude_self, probed_lists=True,
-                probe_frame=probe_frame)
+            cands = _adc_candidates(pruned, q, "_qpool",
+                                    _load_codebooks(ipath), id_col, n_cand,
+                                    exclude_self, probe_frame=qs.probes)
         elif kind == "ivf_mv_bq":
             # Hamming coarse stage over the pooled sign bits — the ONE
             # binary-distance implementation, on the packed pooled query
-            cands = _bq_candidates(
-                pruned, qp, "qid", "_qpool", int(imeta["dim"]), cents,
-                n_probe, id_col, n_cand, exclude_self,
-                probe_frame=probe_frame)
+            cands = _bq_candidates(pruned, q, "_qpool", int(imeta["dim"]),
+                                   id_col, n_cand, exclude_self, qs.probes)
         else:
             if kind == "ivf_mv_sq":
                 deq = quantize.sq_decode_expr(
@@ -1169,12 +1172,11 @@ def search_indexed(spark: SparkSession, root: str, collection: str,
                 pruned = pruned.select(id_col, deq.alias("pooled"),
                                        "list_id")
             cands = quantize.ivf_knn(
-                qp, pruned, cents, k=n_cand, n_probe=n_probe,
-                query_id="qid", query_vec="_qpool", corpus_id=id_col,
-                corpus_vec="pooled", exclude_self=exclude_self,
-                round_to=None, metric=metric,
-                probe_frame=probe_frame).select("qid", "vec_id")
-        out = _maxsim_rescore(spark, root, collection, qp, cands,
+                q, pruned, cents, k=n_cand, n_probe=n_probe,
+                query_vec="_qpool", corpus_id=id_col, corpus_vec="pooled",
+                exclude_self=exclude_self, round_to=None, metric=metric,
+                probe_frame=qs.probes).select("qid", "vec_id")
+        out = _maxsim_rescore(spark, root, collection, q, cands,
                               id_col, vector_name, metric, k, round_to,
                               tenant=tenant)
         # EMPTY-token queries: mean_pool yields NULL so the pooled probe
@@ -1183,13 +1185,12 @@ def search_indexed(spark: SparkSession, root: str, collection: str,
         # corpus side, so even NULL-vector points score), returning the
         # k lowest vec_ids.  Mirror that contract off the collection's
         # id column (tenant-pruned scan of one column; NULL token lists
-        # stay dropped, matching the expression fold).  The qid set
-        # rides the SAME capped collect as the probe — no extra job on
-        # the common no-empty-query path.
-        empty_rows = [(r["qid"],) for r in qinfo if r["_nt"] == 0]
-        if empty_rows:
-            empty_qids = local_frame(
-                spark, empty_rows, qp.select("qid").schema)
+        # stay dropped, matching the expression fold).  The check reads
+        # the driver-side query table — no extra job on the common
+        # no-empty-query path.
+        if any(v is not None and not v
+               for v in qs.table.column("qvec").to_pylist()):
+            empty_qids = q.filter(F.size("qvec") == 0).select("qid")
             allpts = _narrow(read_collection(spark, root, collection,
                                              tenant=tenant))
             # every sim is identically 0.0, so the page is just the k
@@ -1213,130 +1214,69 @@ def search_indexed(spark: SparkSession, root: str, collection: str,
         # scalar-quantized lists: the probe scores the DEQUANTIZED int8
         # codes (pure codegen — the stored floats never load), then the
         # exact rescore fetches only rerank_factor*k candidates
-        cents = _load_centroids(spark, ipath)
-        probed = _probed_list_filter(
-            queries, query_vec, cents, n_probe, max_queries)
-        pruned = _narrow(_apply_masks(
-            spark, ipath, data.filter(F.col("list_id").isin(probed)), id_col
-        ).drop("gen"))
         deq = quantize.sq_decode_expr(
             F.col("codes"), imeta["sq_mins"], imeta["sq_scales"])
         approx = pruned.select(id_col, deq.alias("_deq"), "list_id")
+        # rescore=False: the dequantized metric ranking IS the answer —
+        # no candidate over-fetch, no store fetch
+        scored = quantize.ivf_knn(
+            q, approx, cents, k=n_cand if rescore else k, n_probe=n_probe,
+            corpus_id=id_col, corpus_vec="_deq", exclude_self=exclude_self,
+            round_to=None if rescore else round_to, metric=metric,
+            probe_frame=qs.probes)
         if not rescore:
-            # quantized-score page: the dequantized metric ranking IS
-            # the answer — no candidate over-fetch, no store fetch
-            return quantize.ivf_knn(
-                queries, approx, cents, k=k, n_probe=n_probe,
-                query_id=query_id, query_vec=query_vec, corpus_id=id_col,
-                corpus_vec="_deq", exclude_self=exclude_self,
-                round_to=round_to, metric=metric)
-        cands = quantize.ivf_knn(
-            queries, approx, cents, k=n_cand, n_probe=n_probe,
-            query_id=query_id, query_vec=query_vec, corpus_id=id_col,
-            corpus_vec="_deq", exclude_self=exclude_self,
-            round_to=None, metric=metric).select("qid", "vec_id")
-        return _exact_rescore(spark, root, collection, queries, cands,
-                              id_col, vector_name, metric,
-                              query_id, query_vec, k, round_to,
-                              tenant=tenant)
-
-    if kind == "ivf_bq":
+            return scored
+        cands = scored.select("qid", "vec_id")
+    elif kind == "ivf_bq":
         # binary-quantized lists: Hamming over packed sign words picks
         # the candidates inside the probed partitions (32x less IO than
         # the float scan — integer xor/popcount, pure codegen), then the
         # exact rescore fetches only rerank_factor*k candidates; at full
-        # probe with a covering rerank the answer equals the exact scan
-        cents = _load_centroids(spark, ipath)
-        probed = _probed_list_filter(
-            queries, query_vec, cents, n_probe, max_queries)
-        pruned = _narrow(_apply_masks(
-            spark, ipath, data.filter(F.col("list_id").isin(probed)), id_col
-        ).drop("gen"))
+        # probe with a covering rerank the answer equals the exact scan.
+        # rescore=False: sim = the integer Hamming distance, ranked
+        # ascending — the Qdrant rescore=False BQ contract
+        cands = _bq_candidates(pruned, q, "qvec", int(imeta["dim"]), id_col,
+                               n_cand if rescore else k, exclude_self,
+                               qs.probes, keep_score=not rescore)
         if not rescore:
-            # quantized-score page: sim = the integer Hamming distance,
-            # ranked ascending — the Qdrant rescore=False BQ contract
-            return _bq_candidates(
-                pruned, queries, query_id, query_vec, int(imeta["dim"]),
-                cents, n_probe, id_col, k, exclude_self, keep_score=True)
-        cands = _bq_candidates(
-            pruned, queries, query_id, query_vec, int(imeta["dim"]),
-            cents, n_probe, id_col, n_cand, exclude_self)
-        return _exact_rescore(spark, root, collection, queries, cands,
-                              id_col, vector_name, metric,
-                              query_id, query_vec, k, round_to,
-                              tenant=tenant)
-
-    # pq kinds: ADC candidates (euclidean code-space) + exact metric rescore
-    books = _load_codebooks(spark, ipath)
-    if kind == "ivf_pq":
-        cents = _load_centroids(spark, ipath)
-        probed = _probed_list_filter(
-            queries, query_vec, cents, n_probe, max_queries)
-        data = _narrow(_apply_masks(
-            spark, ipath, data.filter(F.col("list_id").isin(probed)), id_col
-        ).drop("gen"))
+            return cands
+    else:
+        # pq kinds: ADC candidates (euclidean code-space) + exact metric
+        # rescore; ivf_pq probes its lists, pq scans every code.
+        # rescore=False: sim = the ADC code-space distance, ranked
+        # ascending (rounded pre-rank so ties follow values)
+        cands = _adc_candidates(pruned, q, "qvec", _load_codebooks(ipath),
+                                id_col, n_cand if rescore else k,
+                                exclude_self, probe_frame=qs.probes,
+                                keep_score=not rescore, round_to=round_to)
         if not rescore:
-            # quantized-score page: sim = the ADC code-space distance,
-            # ranked ascending (rounded pre-rank so ties follow values)
-            return _adc_candidates(data, queries, query_id, query_vec,
-                                   books, cents, n_probe, id_col,
-                                   k, exclude_self, probed_lists=True,
-                                   keep_score=True, round_to=round_to)
-        cands = _adc_candidates(data, queries, query_id, query_vec,
-                                books, cents, n_probe, id_col,
-                                n_cand, exclude_self,
-                                probed_lists=True)
-    else:  # pq: full codes scan (no list layout)
-        data = _narrow(_apply_masks(spark, ipath, data, id_col).drop("gen"))
-        if not rescore:
-            return _adc_candidates(data, queries, query_id, query_vec,
-                                   books, None, n_probe, id_col,
-                                   k, exclude_self, probed_lists=False,
-                                   keep_score=True, round_to=round_to)
-        cands = _adc_candidates(data, queries, query_id, query_vec,
-                                books, None, n_probe, id_col,
-                                n_cand, exclude_self,
-                                probed_lists=False)
-    return _exact_rescore(spark, root, collection, queries, cands,
-                          id_col, vector_name, metric,
-                          query_id, query_vec, k, round_to,
-                          tenant=tenant, eager_candidates=kind == "pq")
+            return cands
+    return _exact_rescore(spark, root, collection, q, cands, id_col,
+                          vector_name, metric, k, round_to, tenant=tenant,
+                          eager_candidates=kind == "pq")
 
 
-def _adc_candidates(pruned: DataFrame, queries: DataFrame, query_id: str,
-                    query_vec: str, books, cents, n_probe: int,
-                    id_col: str, n_cand: int, exclude_self: bool,
-                    probed_lists: bool,
+def _adc_candidates(pruned: DataFrame, queries: DataFrame, query_vec: str,
+                    books, id_col: str, n_cand: int, exclude_self: bool,
+                    probe_frame: DataFrame | None = None,
                     keep_score: bool = False,
-                    round_to: int | None = None,
-                    probe_frame: DataFrame | None = None) -> DataFrame:
+                    round_to: int | None = None) -> DataFrame:
     """The ONE ADC candidate stage every PQ kind shares (pq / ivf_pq /
     ivf_mv_pq): per-query LUT (NULL query vector → NULL LUT → the pair
-    drops), optional probe-list explode joined against the pruned code
-    partitions, chained element_at distance in codegen, top-``n_cand``
-    per query ascending.  ``keep_score`` returns the full
-    (qid, vec_id, sim, rank) page with sim = the ADC distance (rounded
-    BEFORE ranking when ``round_to`` is set, so rank ties follow the
-    emitted values) — the ``rescore=False`` search shape.
-    ``probe_frame`` (round 14): an explicit (qid, list_id) probe set
-    replaces the pooled-query derivation — the per-token probing path."""
+    drops), the ``(qid, list_id)`` probe frame joined against the pruned
+    code partitions (no probe frame: every code, kind='pq'), chained
+    element_at distance in codegen, top-``n_cand`` per query ascending.
+    ``keep_score`` returns the full (qid, vec_id, sim, rank) page with
+    sim = the ADC distance (rounded BEFORE ranking when ``round_to`` is
+    set, so rank ties follow the emitted values) — the ``rescore=False``
+    search shape."""
     make_lut = quantize.make_lut_udf(books)
+    q = queries.select("qid", make_lut(F.col(query_vec)).alias("_lut"))
     if probe_frame is not None:
-        q = queries.select(
-            F.col(query_id).alias("qid"),
-            make_lut(F.col(query_vec)).alias("_lut"),
-        ).join(probe_frame.toDF("qid", "list_id"), "qid")
-        pairs = pruned.join(F.broadcast(q), "list_id")
-    elif probed_lists:
-        probe = quantize.probe_lists_udf(cents, n_probe)
-        q = queries.select(
-            F.col(query_id).alias("qid"),
-            make_lut(F.col(query_vec)).alias("_lut"),
-            F.explode(probe(F.col(query_vec))).alias("list_id"))
-        pairs = pruned.join(F.broadcast(q), "list_id")
+        pairs = pruned.join(
+            F.broadcast(quantize.join_probe_frame(q, probe_frame)),
+            "list_id")
     else:
-        q = queries.select(F.col(query_id).alias("qid"),
-                           make_lut(F.col(query_vec)).alias("_lut"))
         pairs = pruned.join(F.broadcast(q), how="cross")
     if exclude_self:
         pairs = pairs.filter(F.col("qid") != F.col(id_col))
@@ -1354,33 +1294,23 @@ def _adc_candidates(pruned: DataFrame, queries: DataFrame, query_id: str,
     return ranked.select("qid", "vec_id")
 
 
-def _bq_candidates(pruned: DataFrame, queries: DataFrame, query_id: str,
-                   query_vec: str, dim: int, cents, n_probe: int,
-                   id_col: str, n_cand: int,
-                   exclude_self: bool,
-                   keep_score: bool = False,
-                   probe_frame: DataFrame | None = None) -> DataFrame:
+def _bq_candidates(pruned: DataFrame, queries: DataFrame, query_vec: str,
+                   dim: int, id_col: str, n_cand: int, exclude_self: bool,
+                   probe_frame: DataFrame,
+                   keep_score: bool = False) -> DataFrame:
     """The ONE binary-quantized candidate stage (ivf_bq / ivf_mv_bq):
     the query packs to the same 32-bit sign words as the stored codes
-    (pure codegen — :func:`quantize.binary_pack_expr`), the probe-list
-    explode joins the pruned ``list_id`` partitions, and popcount-of-XOR
-    Hamming (:func:`quantize.hamming_expr`) ranks ascending, top
-    ``n_cand`` per query.  A NULL query vector probes no lists
-    (``probe_lists_udf`` emits []), so it emits no candidates — the
-    degenerate-query policy every coarse stage shares.
-    ``probe_frame`` (round 14): an explicit (qid, list_id) probe set
-    replaces the pooled-query derivation — the per-token probing path."""
-    if probe_frame is not None:
-        q = queries.select(
-            F.col(query_id).alias("qid"),
-            quantize.binary_pack_expr(query_vec, dim).alias("_pq"),
-        ).join(probe_frame.toDF("qid", "list_id"), "qid")
-    else:
-        probe = quantize.probe_lists_udf(cents, n_probe)
-        q = queries.select(
-            F.col(query_id).alias("qid"),
-            quantize.binary_pack_expr(query_vec, dim).alias("_pq"),
-            F.explode(probe(F.col(query_vec))).alias("list_id"))
+    (pure codegen — :func:`quantize.binary_pack_expr`), the
+    ``(qid, list_id)`` probe frame joins the pruned ``list_id``
+    partitions, and popcount-of-XOR Hamming
+    (:func:`quantize.hamming_expr`) ranks ascending, top ``n_cand`` per
+    query.  A NULL query vector probes no lists, so it emits no
+    candidates — the degenerate-query policy every coarse stage
+    shares."""
+    q = quantize.join_probe_frame(
+        queries.select(
+            "qid", quantize.binary_pack_expr(query_vec, dim).alias("_pq")),
+        probe_frame)
     pairs = pruned.join(F.broadcast(q), "list_id")
     if exclude_self:
         pairs = pairs.filter(F.col("qid") != F.col(id_col))
@@ -1426,9 +1356,9 @@ def _maxsim_rescore(spark: SparkSession, root: str, collection: str,
         rows.select(F.col(id_col).alias("vec_id"),
                     F.col(vector_name).alias("_cvs"))
         .join(F.broadcast(cands), "vec_id")
-        .join(F.broadcast(qp.select("qid", "_qvs")), "qid")
+        .join(F.broadcast(qp.select("qid", "qvec")), "qid")
     )
-    sim = maxsim_score_expr(F.col("_qvs"), F.col("_cvs"), metric)
+    sim = maxsim_score_expr(F.col("qvec"), F.col("_cvs"), metric)
     if round_to is not None:
         sim = F.round(sim, round_to)
     rescored = (fetched.select("qid", "vec_id", sim.alias("sim"))
@@ -1438,8 +1368,7 @@ def _maxsim_rescore(spark: SparkSession, root: str, collection: str,
 
 def _exact_rescore(spark: SparkSession, root: str, collection: str,
                    queries: DataFrame, cands: DataFrame, id_col: str,
-                   vector_name: str, metric: str, query_id: str,
-                   query_vec: str, k: int,
+                   vector_name: str, metric: str, k: int,
                    round_to: int | None,
                    tenant: str | None = None,
                    eager_candidates: bool = False) -> DataFrame:
@@ -1467,8 +1396,7 @@ def _exact_rescore(spark: SparkSession, root: str, collection: str,
     if eager_candidates:
         cands = materialize_small(spark, cands)
     q_exact = queries.select(
-        F.col(query_id).alias("qid"), F.col(query_vec).alias("qvec"),
-        vector.l2_norm(F.col(query_vec)).alias("_qn"))
+        "qid", "qvec", vector.l2_norm(F.col("qvec")).alias("_qn"))
     # id_filter=False — same rationale as _maxsim_rescore: the broadcast
     # join on vec_id is the id restriction; the semi-join would run the
     # lazy coarse stage (sq dequant / BQ Hamming / ADC) twice per action

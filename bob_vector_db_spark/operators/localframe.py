@@ -9,8 +9,13 @@ actions stay JVM-side.  Types Arrow can't carry fall back to the rows form
 (same values either way — Arrow distinguishes NULL from NaN, so no value
 drift on the fast path).
 
-Used by every query-vector / probe-list / cursor-page literal site
-(round 14, VERDICT r13 task 3).
+Used by the driver-built query-vector / id-set / mask / cursor-page
+literal sites (round 14, VERDICT r13 task 3).  The persisted-index search
+builds its query-side literals the same way without this helper: it
+reads the caller's queries ONCE with ``DataFrame.toArrow()`` and hands
+that Arrow table (and the probe lists computed from it) straight back to
+``createDataFrame``, so no Python rows are ever materialized
+(``index._read_query_side``).
 """
 
 from __future__ import annotations

@@ -25,6 +25,7 @@ only exchange.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import pandas as pd
@@ -70,12 +71,24 @@ def sq_train(corpus: DataFrame, vec_col: str = "embedding",
     return mins, scales
 
 
+def _double_sql(v: float) -> str:
+    """One DOUBLE SQL literal.  ``repr`` is the shortest exact round-trip
+    and the ``D`` suffix pins the type (a bare ``0.1`` parses as
+    DECIMAL); NaN/±Inf have no numeric literal form (``nanD`` does not
+    parse), so they cast from the strings Spark reads as those values —
+    what ``F.lit`` would carry."""
+    v = float(v)
+    if math.isfinite(v):
+        return f"{v!r}D"
+    word = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+    return f"CAST('{word}' AS DOUBLE)"
+
+
 def _double_array_expr(vals: list[float]) -> "F.Column":
     """Literal array<double> parsed from ONE SQL string: ``F.array`` of N
     ``F.lit`` columns costs ~2N py4j roundtrips (~0.17 s at dim 64, round
-    16); the ``D`` suffix pins each literal to DOUBLE (a bare ``0.1``
-    parses as DECIMAL) and ``repr`` is the shortest exact round-trip."""
-    return F.expr("array(" + ", ".join(f"{float(v)!r}D" for v in vals) + ")")
+    16)."""
+    return F.expr("array(" + ", ".join(map(_double_sql, vals)) + ")")
 
 
 def sq_encode(df: DataFrame, mins: list[float], scales: list[float],
@@ -553,9 +566,8 @@ def ivf_assign(df: DataFrame, centroids, vec_col: str = "embedding",
 def probe_list_ids(V, centroids, n_probe: int):
     """Stable nearest-centroid probe assignment: (n, n_probe) int32 list
     ids per query row.  Shared by the :func:`ivf_knn` query-side UDF and
-    the persisted index's DRIVER-side partition pruner
-    (:mod:`.index`) — identical arithmetic on both sides, so the static
-    prune list can never exclude a list the probe join expects."""
+    the persisted index's DRIVER-side probe (:mod:`.index` builds both
+    its probe frame and its static prune set from it)."""
     import numpy as np  # noqa: PLC0415
 
     C = np.asarray(centroids, dtype=np.float64)
@@ -567,7 +579,11 @@ def probe_list_ids(V, centroids, n_probe: int):
 
 
 def probe_lists_udf(centroids, n_probe: int):
-    """Pandas UDF wrapping :func:`probe_list_ids` (array<int> per query)."""
+    """Pandas UDF wrapping :func:`probe_list_ids` (array<int> per query)
+    — the default probe of the public :func:`ivf_knn` over a caller's
+    lazy query frame.  Persisted-index searches (:mod:`.index`) no
+    longer call it: they compute the probe lists on the driver from
+    their one read of the queries and pass a ``probe_frame``."""
     import numpy as np  # noqa: PLC0415
 
     C = np.asarray(centroids, dtype=np.float64)
@@ -589,6 +605,16 @@ def probe_lists_udf(centroids, n_probe: int):
             yield pd.Series(out)
 
     return probe_lists
+
+
+def join_probe_frame(q: DataFrame, probe_frame: DataFrame,
+                     list_col: str = "list_id") -> DataFrame:
+    """Each query row of ``q`` (keyed ``qid``) × its probe lists from a
+    (qid, list_id) ``probe_frame``.  The key compares NULL-safe, so a
+    NULL qid probes like any other — as it does through the UDF."""
+    pf = probe_frame.toDF("_probe_qid", list_col)
+    return q.join(pf, q["qid"].eqNullSafe(pf["_probe_qid"])).drop(
+        "_probe_qid")
 
 
 def metric_score_expr(qvec_col, cvec_col, qnorm_col, metric: str):
@@ -630,11 +656,10 @@ def ivf_knn(queries: DataFrame, assigned: DataFrame, centroids,
     lists, which made the widened static prune a no-op downstream).
     """
     if probe_frame is not None:
-        pf = probe_frame.toDF("qid", list_col)
-        q = queries.select(
+        q = join_probe_frame(queries.select(
             F.col(query_id).alias("qid"), F.col(query_vec).alias("qvec"),
             vector.l2_norm(F.col(query_vec)).alias("_qn"),
-        ).join(pf, "qid")
+        ), probe_frame, list_col)
     else:
         probe = probe_lists_udf(centroids, n_probe)
         q = queries.select(

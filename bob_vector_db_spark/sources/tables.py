@@ -9,6 +9,7 @@ and the parquet scan only reads what survives (verify with
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -45,25 +46,27 @@ def _ensure_session_confs(spark: SparkSession) -> None:
 # ``spark.read.parquet`` call pays 85-180 ms of driver-side work — py4j
 # roundtrips, DataSource resolution, file listing, footer schema read —
 # and a 222-query suite makes 500+ such calls over the SAME immutable
-# fixture files.  Memoizing the LAZY DataFrame per (session, dir, table)
+# fixture files.  Memoizing the LAZY plan per (session, dir, table)
 # removes that repeated metadata work exactly the way Spark's own
 # filesourcePartitionFileCacheSize caches listings session-wide.  This is
 # a PLAN handle, not data: every action on it still scans the parquet
-# inputs (nothing is persisted or precomputed).  Entries hold a strong
-# session ref and re-resolve when a different session asks — a restarted
-# session never sees a stale handle.  Fixture dirs are immutable for the
-# life of a session (deterministic generated test data), which is the
-# one assumption the memo adds.
-_DF_MEMO: dict[tuple[str, str], tuple[SparkSession, DataFrame]] = {}
+# inputs (nothing is persisted or precomputed).  The memo is keyed
+# weakly by session and holds only the JVM plan handle, never the Python
+# DataFrame (which references its session and would keep the key alive):
+# a session's entries die with it, and a restarted session never sees a
+# stale handle.  Fixture dirs are immutable for the life of a session
+# (deterministic generated test data), which is the one assumption the
+# memo adds.
+_DF_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     key = (os.path.abspath(sf_dir), name)
-    hit = _DF_MEMO.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    memo = _DF_MEMO.setdefault(spark, {})
+    if key in memo:
+        return DataFrame(memo[key], spark)
     _ensure_session_confs(spark)
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
@@ -80,7 +83,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # reinterprets the same wall-clock value — numerically a no-op
             # and identical to DuckDB's naive reading.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _DF_MEMO[key] = (spark, df)
+    memo[key] = df._jdf
     return df
 
 

@@ -64,6 +64,23 @@ def test_per_query_lines_cover_everything_slowest_last():
     assert min(times.values()) in first.values()
 
 
+def test_per_query_lines_budget_for_multi_digit_parts():
+    """With ten or more chunks the part/of indices are two digits wide;
+    every line must still fit ``max_chars``, and be filled close to it."""
+    from bench import per_query_lines
+    import json as _json
+
+    times = {f"query_{i:03d}": 1.0 + i / 1000.0 for i in range(222)}
+    for max_chars in range(120, 200):
+        lines = per_query_lines(times, max_chars=max_chars)
+        assert len(lines) >= 10
+        assert all(len(ln) <= max_chars for ln in lines), max_chars
+        seen = {}
+        for ln in lines:
+            seen.update(_json.loads(ln)["queries"])
+        assert seen == times
+
+
 def test_summary_queries_fits_window_and_keeps_slowest():
     from bench import HEADLINE, PROBE_HEADLINE, summary_queries
     import json as _json

@@ -1332,3 +1332,176 @@ def test_refresh_literal_and_lazy_paths_agree(spark, sf_dir, tmp_path,
     # and the literal path's driver-side counter matches the real count
     imeta = index.vector_index_meta(root, "vecs", "embedding")
     assert imeta.get("mask_rows") == mask_counts[1]
+
+
+# -- the once-read query side -------------------------------------------
+
+class _Jobs:
+    """Spark jobs submitted inside the block, counted through a job group
+    and ``statusTracker`` (one-thread tests: nothing else submits)."""
+
+    _n = 0
+
+    def __init__(self, spark):
+        self.sc = spark.sparkContext
+        _Jobs._n += 1
+        self.group = f"test_index_jobs_{_Jobs._n}"
+
+    def __enter__(self):
+        self.sc.setJobGroup(self.group, self.group)
+        return self
+
+    def __exit__(self, *exc):
+        self.sc.setLocalProperty("spark.jobGroup.id", None)
+        self.sc.setLocalProperty("spark.job.description", None)
+        self.count = len(
+            self.sc.statusTracker().getJobIdsForGroup(self.group))
+
+
+def _row_queries(spark, emb, ids):
+    """A rows-form query frame: every execution of it runs a pickled-row
+    Python worker, so a second evaluation shows in the plan and the job
+    count."""
+    rows = (emb.filter(F.col("vec_id").isin(ids))
+            .select("vec_id", "embedding").collect())
+    return spark.createDataFrame(
+        [(int(r[0]), [float(x) for x in r[1]]) for r in rows],
+        "qid long, qvec array<double>")
+
+
+def test_single_query_ivf_search_reads_queries_once(spark, sf_dir, tmp_path):
+    """One ivf search over a rows-form query frame: the plan scores an
+    Arrow-literal query side (no Python evaluation node — neither the
+    caller's rows nor a probe UDF), and the call plus its collect runs
+    at most 6 Spark jobs (the query read, the artifact's schema
+    inference and the search action's stages)."""
+    root = str(tmp_path / "store")
+    emb = _mk_store(spark, sf_dir, root)
+    index.build_vector_index(spark, root, "vecs", kind="ivf",
+                             n_lists=8, iters=4)
+    q = _row_queries(spark, emb, [3])
+    # warm the session's first-use costs outside the counted call
+    index.search_indexed(spark, root, "vecs", q, k=5, n_probe=2).collect()
+    with _Jobs(spark) as jobs:
+        out = index.search_indexed(spark, root, "vecs", q, k=5, n_probe=2)
+        rows = out.collect()
+    assert len(rows) == 5
+    plan = formatted_plan(out)
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert jobs.count <= 6, jobs.count
+
+
+def test_sidecar_loads_run_no_spark_jobs(spark, sf_dir, tmp_path):
+    """Centroids and codebooks are read with pyarrow on the driver — no
+    Spark job — and equal what a Spark read of the same sidecar gives."""
+    import numpy as np
+
+    root = str(tmp_path / "store")
+    _mk_store(spark, sf_dir, root)
+    index.build_vector_index(spark, root, "vecs", kind="ivf_pq",
+                             n_lists=4, m=8, ksub=16, iters=2)
+    ipath = index.index_path(root, "vecs", "embedding")
+    with _Jobs(spark) as jobs:
+        cents = index._load_centroids(ipath)
+        books = index._load_codebooks(ipath)
+    assert jobs.count == 0
+    want = [r["centroid"] for r in spark.read.parquet(
+        f"{ipath}/centroids").orderBy("list_id").collect()]
+    np.testing.assert_array_equal(cents, np.array(want))
+    rows = spark.read.parquet(f"{ipath}/codebooks").collect()
+    assert len(books) == 8 and all(b.shape == (16, 8) for b in books)
+    for r in rows:
+        np.testing.assert_array_equal(books[r["subspace"]][r["code"]],
+                                      r["centroid"])
+
+
+def test_empty_query_frame_returns_no_rows(spark, sf_dir, tmp_path):
+    root = str(tmp_path / "store")
+    _mk_store(spark, sf_dir, root)
+    none = spark.createDataFrame([], "qid long, qvec array<double>")
+    for kind in ("ivf", "ivf_bq", "pq"):
+        index.build_vector_index(spark, root, "vecs", kind=kind,
+                                 n_lists=4, m=8, ksub=16, iters=2)
+        out = index.search_indexed(spark, root, "vecs", none, k=5, n_probe=2)
+        assert out.collect() == [], kind
+
+
+def test_duplicate_and_null_qids_match_the_exact_scan(spark, sf_dir,
+                                                      tmp_path):
+    """Two query rows sharing a qid: each row scores on its own, both
+    land in the same top-k window — the exact scan's behaviour, kept at
+    full probe.  A NULL qid is a key like any other on both paths."""
+    root = str(tmp_path / "store")
+    emb = _mk_store(spark, sf_dir, root)
+    index.build_vector_index(spark, root, "vecs", kind="ivf",
+                             n_lists=8, iters=4)
+    two = _row_queries(spark, emb, [1, 2])
+    q = (two.withColumn("qid", F.lit(7).cast("long"))
+         .unionByName(_row_queries(spark, emb, [4]))
+         .unionByName(_row_queries(spark, emb, [5])
+                      .withColumn("qid", F.lit(None).cast("long"))))
+
+    def rows(df):
+        return sorted((-1 if r[0] is None else r[0], *r[1:])
+                      for r in df.select("qid", "vec_id", "sim", "rank")
+                      .collect())
+
+    exact = knn.search_collection(spark, root, "vecs", q, k=6,
+                                  corpus_id="id", use_index=False)
+    full = knn.search_collection(spark, root, "vecs", q, k=6,
+                                 corpus_id="id", use_index="always",
+                                 n_probe=8)
+    assert rows(full) == rows(exact)
+    assert {r[0] for r in rows(full)} == {7, 4, -1}
+
+
+def test_max_queries_raises_before_the_artifact_is_read(spark, sf_dir,
+                                                        tmp_path):
+    """The query-side cap fails loudly before the search touches the
+    artifact: with the data layout moved away, the error is still the
+    cap's, not a missing path."""
+    import os
+
+    root = str(tmp_path / "store")
+    emb = _mk_store(spark, sf_dir, root)
+    index.build_vector_index(spark, root, "vecs", kind="ivf",
+                             n_lists=4, iters=2)
+    ipath = index.index_path(root, "vecs", "embedding")
+    os.rename(f"{ipath}/data", f"{ipath}/data_moved")
+    with pytest.raises(ValueError, match="max_queries"):
+        index.search_indexed(spark, root, "vecs", _queries(emb, 3), k=5,
+                             n_probe=2, max_queries=2)
+
+
+def test_parquet_and_rows_query_frames_agree(spark, sf_dir, tmp_path):
+    root = str(tmp_path / "store")
+    emb = _mk_store(spark, sf_dir, root)
+    index.build_vector_index(spark, root, "vecs", kind="ivf_sq",
+                             n_lists=4, iters=2)
+    rows_q = _row_queries(spark, emb, [0, 2, 5])
+    rows_q.write.parquet(str(tmp_path / "q.parquet"))
+    pq_q = spark.read.parquet(str(tmp_path / "q.parquet"))
+    a = index.search_indexed(spark, root, "vecs", rows_q, k=5, n_probe=2)
+    b = index.search_indexed(spark, root, "vecs", pq_q, k=5, n_probe=2)
+    assert _rows(a) == _rows(b) and len(_rows(a)) == 15
+
+
+def test_driver_probes_equal_the_probe_udf(spark, sf_dir, tmp_path):
+    """At a partial probe, the driver-computed probe lists select exactly
+    the rows the public ``ivf_knn``'s probe UDF selects over the same
+    artifact data."""
+    from bob_vector_db_spark.operators import quantize
+
+    root = str(tmp_path / "store")
+    emb = _mk_store(spark, sf_dir, root)
+    index.build_vector_index(spark, root, "vecs", kind="ivf",
+                             n_lists=8, iters=4)
+    ipath = index.index_path(root, "vecs", "embedding")
+    q = _queries(emb, 6)
+    got = index.search_indexed(spark, root, "vecs", q, k=10, n_probe=2,
+                               exclude_self=True)
+    data = spark.read.parquet(f"{ipath}/data").drop("gen")
+    want = quantize.ivf_knn(q, data, index._load_centroids(ipath), k=10,
+                            n_probe=2, corpus_id="id",
+                            corpus_vec="embedding", exclude_self=True)
+    assert _rows(got) == _rows(want) and len(_rows(got)) == 60

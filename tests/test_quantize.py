@@ -236,3 +236,17 @@ def test_binary_rerank_rejects_dim_mismatch_both_sides(spark, sf_dir):
                       F.col("embedding").alias("qvec")).limit(1)
     with pytest.raises(ValueError, match="corpus vectors"):
         quantize.binary_knn_rerank(q_ok, emb, k=3, dim=32)
+
+
+def test_double_array_literal_keeps_non_finite_values(spark):
+    """SQ params over a corpus holding NaN/Inf carry non-finite values;
+    the one-string literal array must parse them (``repr`` alone gives
+    ``nanD``/``infD``, which is not SQL) and keep them exactly."""
+    import math
+
+    vals = [0.5, float("nan"), float("inf"), -float("inf"), -0.0, 1e-300]
+    got = spark.range(1).select(
+        quantize._double_array_expr(vals).alias("a")).first()["a"]
+    assert math.isnan(got[1])
+    assert got[:1] + got[2:] == vals[:1] + vals[2:]
+    assert math.copysign(1.0, got[4]) == -1.0
