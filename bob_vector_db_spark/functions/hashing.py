@@ -50,11 +50,6 @@ def poly_hash(token: Column, mod: int = POLY_MOD) -> Column:
     )
 
 
-def minhash_perm(h: Column, a: int, b: int) -> Column:
-    """One universal-hash permutation (a*h + b) mod MINHASH_PRIME."""
-    return (h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)
-
-
 def minhash_params(n: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) parameter list shared with the oracle SQL.
 

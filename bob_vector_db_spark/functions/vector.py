@@ -45,10 +45,6 @@ def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
     return acc
 
 
-def l2_norm_unrolled(a: Column, dim: int) -> Column:
-    return F.sqrt(dot_unrolled(a, a, dim))
-
-
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 

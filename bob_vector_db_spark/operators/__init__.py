@@ -13,10 +13,9 @@ from . import (
     skew,
     sparse,
     text_search,
-    topk,
     upsert,
 )
 
 __all__ = ["asof", "centroid", "dedup", "embed", "index", "knn",
            "multimodal", "normalize", "payload_index", "quantize",
-           "sampling", "skew", "sparse", "text_search", "topk", "upsert"]
+           "sampling", "skew", "sparse", "text_search", "upsert"]

@@ -523,11 +523,12 @@ def search_points(spark: SparkSession, root: str, collection: str,
             # kinds emit distances (Hamming / ADC — lower is better),
             # so the threshold cuts as an upper bound there; sq emits
             # the metric score and keeps its native direction
-            from .index import vector_index_meta  # noqa: PLC0415
+            from .index import KINDS, vector_index_meta  # noqa: PLC0415
 
             _im = vector_index_meta(root, collection, vector_name,
                                     tenant) or {}
-            if _im.get("kind") in ("ivf_bq", "pq", "ivf_pq"):
+            _spec = KINDS.get(_im.get("kind"))
+            if _spec is not None and _spec.quant in ("pq", "bq"):
                 cut_metric = "euclid"
         out = out.filter(_native_cut(F.col("sim"), score_threshold,
                                      cut_metric))

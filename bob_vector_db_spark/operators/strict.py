@@ -19,11 +19,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from .index import KINDS
 
-# index kinds whose artifact exists to make search IO cheap; strict mode
-# refuses to bypass them with a full-probe / exact scan
-QUANTIZED_KINDS = ("pq", "ivf_pq", "ivf_sq", "ivf_bq",
-                   "ivf_mv_sq", "ivf_mv_pq", "ivf_mv_bq")
+# index kinds whose artifact exists to make search IO cheap (the ones
+# with a quantizer); strict mode refuses to bypass them with a
+# full-probe / exact scan
+QUANTIZED_KINDS = tuple(k for k, s in KINDS.items() if s.quant)
 
 
 @dataclass(frozen=True)
@@ -213,7 +214,7 @@ def check_probe(root: str, collection: str, vector_name: str | None,
             f"use_index=False requests the exact full scan — search "
             f"through the artifact, or allow it with "
             f"StrictMode(search_allow_exact=True)")
-    if n_probe is None and imeta.get("kind") != "pq":
+    if n_probe is None and KINDS[imeta["kind"]].lists:
         # kind='pq' has no list layout — its codes scan IS the cheap
         # path, so only the IVF-list kinds carry the full-probe refusal
         raise ValueError(

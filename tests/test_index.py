@@ -1282,41 +1282,50 @@ def test_dense_builds_drop_nulled_vectors(spark, sf_dir, tmp_path):
         assert full.filter(F.col("vec_id").isin("3", "4")).count() == 0
 
 
-def test_refresh_literal_and_lazy_paths_agree(spark, sf_dir, tmp_path,
-                                              monkeypatch):
-    """Round-15 optimization: run_incremental_refresh collects the
-    classified delta once (literal path) when it fits the
-    BVDS_MATERIALIZE_CAP roundtrip, falling back to the original
-    all-lazy plan past the cap.  Both paths must produce identical
-    indexed results and equivalent mask state after the SAME churn —
-    forced here via the env knob (cap=0 ⇒ always lazy)."""
+def _churn_with_adopted_delete(spark, root, rnd):
+    """_mutate plus one crash-adopted delete of id 7: a published delta
+    whose data swap never ran, so the refresh must reclassify the
+    still-live id as an upsert."""
+    import os as _os
+
+    from bob_vector_db_spark.operators.upsert import (
+        _log_delta,
+        _next_version,
+        _set_version,
+        collection_path,
+    )
+    _mutate(spark, root, rnd, 0)
+    path = collection_path(root, "vecs")
+    v = _next_version(root, "vecs")
+    _log_delta(path, v, "delete",
+               spark.createDataFrame([("7",)], "id string"))
+    _set_version(root, "vecs", v)
+    assert _os.path.isdir(_os.path.join(path, "_delta", f"v={v}"))
+
+
+def test_refresh_chunked_and_single_chunk_agree(spark, sf_dir, tmp_path,
+                                                monkeypatch):
+    """run_incremental_refresh collects the classified delta as ONE chunk
+    when it fits the BVDS_MATERIALIZE_CAP roundtrip and streams it in
+    cap-sized chunks past the cap.  Both must produce identical indexed
+    results and equivalent mask state after the SAME churn — forced here
+    via the env knob (cap=5 ⇒ at least 3 chunks)."""
     rnd = __import__("random").Random(15)
-    results, mask_counts = [], []
-    for cap, sub in (("0", "lazy"), ("1000000", "literal")):
+    results, mask_counts, metas = [], [], []
+    for cap, sub in (("5", "chunked"), ("1000000", "single")):
         monkeypatch.setenv("BVDS_MATERIALIZE_CAP", cap)
         root = str(tmp_path / f"store_{sub}")
         emb = _mk_store(spark, sf_dir, root)
         index.build_vector_index(spark, root, "vecs", kind="ivf",
                                  n_lists=8, iters=3)
         state = rnd.getstate()
-        _mutate(spark, root, rnd, 0)
+        _churn_with_adopted_delete(spark, root, rnd)
         rnd.setstate(state)  # identical churn for both stores
-        # one crash-adopted delete: published delta, data swap never ran —
-        # the refresh must reclassify the still-live id on BOTH paths
-        import os as _os
-
-        from bob_vector_db_spark.operators.upsert import (
-            _log_delta,
-            _next_version,
-            _set_version,
-            collection_path,
-        )
-        path = collection_path(root, "vecs")
-        v = _next_version(root, "vecs")
-        _log_delta(path, v, "delete",
-                   spark.createDataFrame([("7",)], "id string"))
-        _set_version(root, "vecs", v)
-        assert _os.path.isdir(_os.path.join(path, "_delta", f"v={v}"))
+        if sub == "chunked":
+            built = index.vector_index_meta(
+                root, "vecs", "embedding")["built_version"]
+            assert index._delta_classified(
+                spark, root, "vecs", built).count() > 2 * int(cap)
         index.refresh_vector_index(spark, root, "vecs")
         assert index.index_is_fresh(root, "vecs", "embedding")
         q = _queries(emb)
@@ -1326,12 +1335,118 @@ def test_refresh_literal_and_lazy_paths_agree(spark, sf_dir, tmp_path,
         results.append(_rows(full))
         mask_counts.append(index._mask_row_count(
             spark, index.index_path(root, "vecs", "embedding")))
+        metas.append(index.vector_index_meta(root, "vecs", "embedding"))
     assert results[0] == results[1]
-    # same mask ROWS on both paths (id 7 reclassified upsert on both)
+    # same mask ROWS on both sides (id 7 reclassified upsert on both)
     assert mask_counts[0] == mask_counts[1]
-    # and the literal path's driver-side counter matches the real count
-    imeta = index.vector_index_meta(root, "vecs", "embedding")
-    assert imeta.get("mask_rows") == mask_counts[1]
+    # and the driver-side counter matches the real count on both sides
+    assert [m.get("mask_rows") for m in metas] == mask_counts
+
+
+def test_refresh_crash_between_chunks_reruns_to_the_same_result(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """A chunked refresh whose second append raises has already written
+    the first chunks' masks and rows at the claimed generation g but
+    never committed: the index stays stale, and the rerun (at g+1, its
+    masks hiding the dead attempt's rows) answers exactly like a refresh
+    that never crashed."""
+    import os
+
+    monkeypatch.setenv("BVDS_MATERIALIZE_CAP", "5")
+    rnd = __import__("random").Random(16)
+    results = []
+    for crash in (False, True):
+        root = str(tmp_path / f"store_{crash}")
+        emb = _mk_store(spark, sf_dir, root)
+        index.build_vector_index(spark, root, "vecs", kind="ivf",
+                                 n_lists=8, iters=3)
+        state = rnd.getstate()
+        _churn_with_adopted_delete(spark, root, rnd)
+        rnd.setstate(state)
+        if crash:
+            appends = []
+            real_encode = index._encode
+
+            def failing_encode(*args, **kwargs):
+                appends.append(1)
+                if len(appends) == 2:
+                    raise RuntimeError("simulated crash in chunk append")
+                return real_encode(*args, **kwargs)
+
+            with monkeypatch.context() as m:
+                m.setattr(index, "_encode", failing_encode)
+                with pytest.raises(RuntimeError, match="simulated crash"):
+                    index.refresh_vector_index(spark, root, "vecs")
+            ipath = index.index_path(root, "vecs", "embedding")
+            assert os.path.isdir(os.path.join(ipath, "masks"))
+            assert not index.index_is_fresh(root, "vecs", "embedding")
+            assert index.vector_index_meta(
+                root, "vecs", "embedding")["generation"] == 1
+        imeta = index.refresh_vector_index(spark, root, "vecs")
+        assert imeta["generation"] == (2 if crash else 1)
+        assert index.index_is_fresh(root, "vecs", "embedding")
+        full = knn.search_collection(spark, root, "vecs", _queries(emb),
+                                     k=10, corpus_id="id",
+                                     exclude_self=True, use_index="always",
+                                     n_probe=8)
+        results.append(_rows(full))
+    assert results[0] == results[1]
+    pairs = [(q, v) for q, v, _, _ in results[1]]
+    assert len(pairs) == len(set(pairs))
+
+
+@pytest.mark.parametrize("kind", index.VALID_KINDS)
+def test_every_kind_refresh_equals_exact_and_keeps_columns(
+        spark, sf_dir, tmp_path, kind):
+    """Each of the vector index kinds through build → churn (new ids,
+    overwrites, a delete, one delete_vectors NULL) → refresh: a full
+    probe with a covering rerank equals the exact scan over the mutated
+    collection, and every data file the refresh appended has the built
+    artifact's columns."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "store")
+    pooled = index.KINDS[kind].pooled
+    if pooled:
+        pts, vn = _mk_mv_store(spark, sf_dir, root), "colbert"
+    else:
+        emb, vn = _mk_store(spark, sf_dir, root), "embedding"
+        pts = emb.select(F.col("vec_id").alias("id"), "embedding")
+    index.build_vector_index(spark, root, "vecs", kind=kind, n_lists=4,
+                             m=8, ksub=16, iters=2)
+    ipath = index.index_path(root, "vecs", vn)
+
+    def columns():
+        files = glob.glob(os.path.join(ipath, "data", "**", "*.parquet"),
+                          recursive=True)
+        return {tuple((f.name, str(f.type)) for f in pq.read_schema(p))
+                for p in files}
+
+    built = columns()
+    src = pts.filter(F.col("id") < 30).orderBy("id").collect()
+    rows = ([(int(r["id"]) + 90_000, r[vn]) for r in src[10:18]]
+            + [(int(r["id"]), r2[vn]) for r, r2 in zip(src[:4], src[4:8])])
+    col_type = "array<array<double>>" if pooled else "array<double>"
+    upsert.upsert(spark, root, "vecs", spark.createDataFrame(
+        rows, f"id long, {vn} {col_type}"))
+    upsert.delete_points(spark, root, "vecs", [20])
+    upsert.delete_vectors(spark, root, "vecs", [25], [vn])
+    index.refresh_vector_index(spark, root, "vecs")
+    assert index.index_is_fresh(root, "vecs", vn)
+    assert columns() == built
+
+    q = pts.filter(F.col("id") < 3).select(
+        F.col("id").alias("qid"), F.col(vn).alias("qvec"))
+    exact = knn.search_collection(
+        spark, root, "vecs", q, k=5, corpus_id="id", exclude_self=True,
+        use_index=False, **({"vectorized": False} if pooled else {}))
+    full = index.search_indexed(spark, root, "vecs", q, k=5, n_probe=None,
+                                rerank_factor=200, exclude_self=True)
+    assert _rows(full) == _rows(exact)
+    assert full.filter(F.col("vec_id").isin("20", "25")).count() == 0
 
 
 # -- the once-read query side -------------------------------------------

@@ -7,18 +7,34 @@ bench HEADLINE + PROBE_HEADLINE sets).  The fixture side effects run
 exactly as in the bench (fn() builds collections/indexes eagerly); the
 captured plan is the returned DataFrame's — the plan the bench's timed
 count() executes.
+
+Paths are written relative to two placeholders so that plans captured by
+different processes, or against different checkouts, diff cleanly: the
+scale-factor directory becomes ``${SF_DIR}`` and each fixture's
+per-process temp store (``<tmpdir>/bvds_<tag>_<sf>_<pid>``) becomes
+``${TMP}``.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import re
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bob_vector_db_spark.session import get_spark  # noqa: E402
 from bob_vector_db_spark import queries as Q  # noqa: E402
+
+
+def normalize_paths(text: str, sf_dir: str) -> str:
+    """Replace the sf-dir and this process's fixture temp-dir prefixes
+    with ``${SF_DIR}`` / ``${TMP}``."""
+    text = text.replace(os.path.abspath(sf_dir), "${SF_DIR}")
+    tmp = re.escape(tempfile.gettempdir())
+    return re.sub(rf"{tmp}/bvds_[^/\s\],]*_{os.getpid()}", "${TMP}", text)
 
 
 def main() -> int:
@@ -45,7 +61,7 @@ def main() -> int:
             sys.stdout = stdout
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
-            fh.write(buf.getvalue())
+            fh.write(normalize_paths(buf.getvalue(), sf_dir))
         print(f"wrote {path}")
         spark.catalog.clearCache()
     return 0
