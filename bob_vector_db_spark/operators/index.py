@@ -961,13 +961,13 @@ def search_indexed(spark: SparkSession, root: str, collection: str,
             f"run build_vector_index first"
             + (" (per-tenant: build_vector_index(tenant=...))"
                if tenant is not None else ""))
-    if not allow_stale and not index_is_fresh(root, collection, vector_name,
-                                              tenant):
+    version = None if allow_stale else collection_version(root, collection)
+    if version is not None and int(imeta["built_version"]) != version:
         raise ValueError(
             f"index for {collection!r}/{_index_name(vector_name, tenant)!r} "
             f"was built at data "
             f"version {imeta['built_version']} but the collection is at "
-            f"{collection_version(root, collection)}; refresh_vector_index "
+            f"{version}; refresh_vector_index "
             f"absorbs the mutations incrementally (or rebuild, or search "
             f"with use_index='auto' to fall back to the exact scan)")
     kind, metric, id_col = imeta["kind"], imeta["metric"], imeta["id_col"]

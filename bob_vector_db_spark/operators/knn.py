@@ -12,9 +12,18 @@ Memory-bounded variants live in :mod:`.quantize` (scalar-int8 / binary /
 product quantization, trained IVF); lexical and hybrid retrieval in
 :mod:`.text_search`.  All share this module's output contract
 (qid, vec_id, sim-or-dist, rank).
+
+Every search over a stored collection takes one route:
+:func:`resolve_route` names the space and decides, once, between the
+persisted index and the exact scan, returning a :class:`Route`;
+:func:`exact_scan` is the one place that picks the exact scorer
+(:func:`knn_join` / :func:`knn_join_maxsim` /
+:func:`knn_join_maxsim_vectorized`) for a route.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -108,6 +117,155 @@ def knn_join(
     )
 
 
+class Route(NamedTuple):
+    """One search request's resolved decisions (:func:`resolve_route`)."""
+
+    vector_name: str     # the searched space
+    cfg: dict            # its declared config (distance, multivector, ...)
+    metric: str          # the explicit override, else the declared metric
+    imeta: dict | None   # the fresh index to probe; None = the exact scan
+    always: bool         # use_index resolved to 'always'
+
+
+def _declared_space(meta: dict, collection: str,
+                    vector_name: str | None) -> tuple[str, dict]:
+    """The (only or named) vector space of a collection's meta and its
+    declared config — the one place a request names its space."""
+    vectors = meta.get("vectors", {})
+    if vector_name is None:
+        if len(vectors) != 1:
+            raise ValueError(
+                f"collection {collection!r} declares {sorted(vectors)} "
+                f"vector spaces; pass vector_name")
+        vector_name = next(iter(vectors))
+    return vector_name, vectors.get(vector_name, {})
+
+
+def _resolve_search_space(root: str, collection: str,
+                          vector_name: str | None, meta: dict | None = None):
+    """Resolve the searched dense space: collection meta (read unless
+    passed), id column, the space (:func:`_declared_space`) and its
+    declared metric.  Returns (meta, id_col, vector_name, metric)."""
+    if meta is None:
+        from .upsert import collection_meta  # noqa: PLC0415
+
+        meta = collection_meta(root, collection) or {}
+    vector_name, cfg = _declared_space(meta, collection, vector_name)
+    if str(cfg.get("kind", "")).lower() == "sparse":
+        # the dense surface (search/recommend/discover/context/groups)
+        # has no meaning over a posting-list space — refuse HERE, once,
+        # so every caller gets the same message instead of a deep
+        # shape error (recommend can't average postings, discover
+        # can't triplet-score them, ...)
+        raise ValueError(
+            f"space {collection!r}/{vector_name!r} is SPARSE — this "
+            f"operation needs a dense (or multivector) space; query a "
+            f"sparse space with a sparse nearest node "
+            f"({{'nearest': {{'indices': [...], 'values': [...]}}, "
+            f"'using': {vector_name!r}}}) or search_sparse_points")
+    metric = resolve_metric(cfg.get("distance", "cosine"))
+    return meta, meta.get("id_col", "id"), vector_name, metric
+
+
+def resolve_route(root: str, collection: str, vector_name: str | None, *,
+                  tenant: str | None = None, metric: str | None = None,
+                  use_index: str | bool = "auto", rescore: bool = True,
+                  oversampling: float | None = None,
+                  meta: dict | None = None) -> Route:
+    """Decide index vs exact scan for one search — every vector search
+    (``search_collection``, ``search_points``) asks here, once.
+
+    ``use_index``: "auto" probes the stored index iff it is present, of
+    a kind the space can use (a multivector space needs a pooled kind),
+    fresh (its built_version equals the collection's data version) and
+    built for the search metric; otherwise it returns the exact scan — a
+    mutation can never be masked by a stale index.  "always" (or
+    ``True``) requires that index and raises naming why it can't be
+    used; False is the exact scan regardless.  ``rescore=False`` or an
+    ``oversampling`` describe the quantized artifact's search, which the
+    exact scan can't honor, so they imply "always".
+
+    ``tenant`` makes the decision TENANT-AWARE: the global index clusters
+    across tenants and can't answer a scoped search, so only the
+    tenant's own artifact (``build_vector_index(tenant=...)``) qualifies.
+    """
+    if not (isinstance(use_index, bool) or use_index in ("auto", "always")):
+        raise ValueError(
+            f"use_index must be 'auto', 'always', True or False; "
+            f"got {use_index!r}")
+    meta, _, vector_name, declared = _resolve_search_space(
+        root, collection, vector_name, meta)
+    cfg = meta.get("vectors", {}).get(vector_name, {})
+    multivector = cfg.get("multivector")
+    if multivector is not None \
+            and str(multivector).lower() not in ("max_sim", "maxsim"):
+        raise ValueError(
+            f"unknown multivector comparator {multivector!r} for "
+            f"{collection!r}/{vector_name!r} (only 'max_sim')")
+    metric = declared if metric is None else resolve_metric(metric)
+    if not rescore or oversampling is not None:
+        if use_index is False:
+            raise ValueError(
+                "rescore=False / oversampling describe the quantized "
+                "artifact's search — they can't combine with "
+                "use_index=False (the exact scan has no quantized "
+                "stage)")
+        use_index = "always"
+    always = use_index is True or use_index == "always"
+    if use_index is False:
+        return Route(vector_name, cfg, metric, None, False)
+    from .index import MV_KINDS, vector_index_meta  # noqa: PLC0415
+    from .upsert import collection_version  # noqa: PLC0415
+
+    imeta = vector_index_meta(root, collection, vector_name, tenant)
+    if imeta is None:
+        why = "absent"
+    elif multivector is not None and imeta["kind"] not in MV_KINDS:
+        why = f"kind {imeta['kind']!r} (need one of {MV_KINDS})"
+    elif int(imeta["built_version"]) != collection_version(root, collection):
+        why = "stale"
+    elif imeta["metric"] != metric:
+        why = f"built for metric {imeta['metric']!r}"
+    else:
+        return Route(vector_name, cfg, metric, imeta, always)
+    if always:
+        hint = ", ".join(
+            (["kind='ivf_mv'"] if multivector is not None else [])
+            + (["tenant=..."] if tenant is not None else []))
+        raise ValueError(
+            f"use_index='always' but the "
+            f"{'multivector ' if multivector is not None else ''}index for "
+            f"{collection!r}/{vector_name!r}"
+            + (f" (tenant {tenant!r})" if tenant is not None else "")
+            + f" is {why}; build_vector_index"
+            + (f"({hint})" if hint else "")
+            + " or search with use_index='auto'")
+    return Route(vector_name, cfg, metric, None, False)
+
+
+def exact_scan(queries: DataFrame, corpus: DataFrame, route: Route,
+               k: int = 10, query_id: str = "qid", query_vec: str = "qvec",
+               corpus_id: str = "id", exclude_self: bool = False,
+               round_to: int | None = 6,
+               vectorized: str | bool = "auto") -> DataFrame:
+    """The exact scan of a resolved route — the ONE place that picks the
+    scorer: :func:`knn_join` for a dense space; for a multivector space
+    late-interaction max-sim, BLAS-batched
+    (:func:`knn_join_maxsim_vectorized`) when ``vectorized`` allows and
+    both id columns are integral, else the expression form
+    :func:`knn_join_maxsim` (the bit-identical oracle contract)."""
+    kw = dict(k=k, query_id=query_id, query_vec=query_vec,
+              corpus_id=corpus_id, corpus_vec=route.vector_name,
+              metric=route.metric, exclude_self=exclude_self,
+              round_to=round_to)
+    if route.cfg.get("multivector") is None:
+        return knn_join(queries, corpus, **kw)
+    if vectorized is not False and _maxsim_blas_ok(
+            vectorized, queries, query_id, corpus, corpus_id):
+        return knn_join_maxsim_vectorized(queries, corpus, **kw)
+    return knn_join_maxsim(queries, corpus, **kw)
+
+
 def search_collection(
     spark: SparkSession,
     root: str,
@@ -138,18 +296,12 @@ def search_collection(
     product without the caller restating it.  ``metric`` overrides only when
     passed explicitly.
 
-    ``use_index`` dispatches to a PERSISTED index (operators.index) when one
-    exists — the Qdrant model, where searches probe the structure built at
-    upsert time rather than scanning:
-
-      "auto"   probe the stored index iff present AND fresh (its
-               built_version matches the collection's data version) AND no
-               explicit ``metric`` override conflicts with it; otherwise
-               silently fall back to the exact scan — a mutation can
-               therefore never be masked by a stale index.
-      "always" (or ``True``) require the index: raise when absent or stale
-               (tests / latency-guaranteed paths).
-      False    exact scan regardless.
+    :func:`resolve_route` decides between a PERSISTED index
+    (operators.index — the Qdrant model, where searches probe the
+    structure built at upsert time) and the exact scan, from
+    ``use_index`` ("auto" | "always" | True | False), ``tenant`` (only
+    a per-tenant artifact answers a scoped search) and the quantization
+    params; :func:`exact_scan` scores the scan.
 
     ``n_probe=None`` (the default) probes EVERY list, so for a kind='ivf'
     index dispatch changes the physical plan but never the answer —
@@ -169,176 +321,66 @@ def search_collection(
     keeps the expression form (the bit-identical oracle contract).
     Single-vector scans are unaffected.
 
-    ``tenant`` scopes the search to one tenant of a multitenant collection
-    (the Qdrant shard-key selector).  Index dispatch is TENANT-AWARE: the
-    global index clusters across tenants and cannot answer a scoped
-    search, so only a PER-TENANT artifact (``build_vector_index(
-    tenant=...)``) qualifies — "auto" falls back to the pruned exact scan
-    (the right plan for most tenants: the slice is small and the
-    partition subtree is the pruning unit), "always" raises unless the
-    tenant's own index exists and is fresh.
-
     ``rescore`` / ``oversampling`` are Qdrant's
     ``QuantizationSearchParams`` (round 13), threaded to the stored
     artifact: ``rescore=False`` returns the QUANTIZED-score ranking for
     the sq/pq/bq kinds (skipping the exact-rescore fetch — the
     cheap-recall mode), ``oversampling`` sizes the candidate stage at
-    ``ceil(oversampling·k)``.  Because they describe the quantized
-    artifact, a non-default value FORCES index dispatch (use_index
-    becomes 'always'): silently answering from the exact scan would
-    return exact scores where the caller asked for quantized ones.
+    ``ceil(oversampling·k)``.
 
     ``probe_per_token`` (round 13 — multivector artifacts only): probe
     the union of every query TOKEN's nearest lists alongside the pooled
     query's, recovering recall the mean-pool loses on semantically
     scattered token sets; see :func:`index.search_indexed`.
     """
-    from .index import (  # noqa: PLC0415
-        index_is_fresh,
-        search_indexed,
-        vector_index_meta,
-    )
-    from .upsert import collection_meta, read_collection  # noqa: PLC0415
+    if vectorized is not False and vectorized not in ("auto", "always"):
+        raise ValueError(
+            f"vectorized must be 'auto', 'always' or False; "
+            f"got {vectorized!r}")
+    route = resolve_route(root, collection, vector_name, tenant=tenant,
+                          metric=metric, use_index=use_index,
+                          rescore=rescore, oversampling=oversampling)
+    return _run_route(spark, root, collection, queries, route, k=k,
+                      query_id=query_id, query_vec=query_vec,
+                      corpus_id=corpus_id, exclude_self=exclude_self,
+                      n_probe=n_probe, rerank_factor=rerank_factor,
+                      tenant=tenant, vectorized=vectorized,
+                      rescore=rescore, oversampling=oversampling,
+                      probe_per_token=probe_per_token)
 
-    meta = collection_meta(root, collection) or {}
-    vectors = meta.get("vectors", {})
-    if vector_name is None:
-        if len(vectors) != 1:
-            raise ValueError(
-                f"collection {collection!r} declares {sorted(vectors)} vector "
-                f"spaces; pass vector_name to pick one")
-        vector_name = next(iter(vectors))
-    declared = vectors.get(vector_name, {}).get("distance", "cosine")
-    if use_index is True:  # the natural bool complement of False
-        use_index = "always"
-    if not rescore or oversampling is not None:
-        # quantization search params describe the stored artifact — the
-        # exact-scan fallback can't honor them, so they imply 'always'
-        if use_index is False:
-            raise ValueError(
-                "rescore=False / oversampling describe the quantized "
-                "artifact's search — they can't combine with "
-                "use_index=False (the exact scan has no quantized "
-                "stage)")
-        use_index = "always"
-    multivector = vectors.get(vector_name, {}).get("multivector")
-    if multivector is not None:
-        # MULTIVECTOR space (Qdrant multivector config, max_sim
-        # comparator): dispatches to the ivf_mv artifact when one is
-        # fresh (coarse IVF over pooled tokens + exact max-sim rescore —
-        # the Qdrant multivector-HNSW twin for this store, VERDICT r7
-        # missing #2); otherwise late-interaction scoring over the exact
-        # scan, BLAS-batched when the id contract allows (vectorized
-        # 'auto' — VERDICT r7 wrong #1)
-        if str(multivector).lower() not in ("max_sim", "maxsim"):
-            raise ValueError(
-                f"unknown multivector comparator {multivector!r} for "
-                f"{collection!r}/{vector_name!r} (only 'max_sim')")
-        if use_index in ("auto", "always"):
-            imeta = vector_index_meta(root, collection, vector_name,
-                                      tenant=tenant)
-            fresh = index_is_fresh(root, collection, vector_name,
-                                   tenant=tenant)
-            metric_ok = metric is None or (
-                imeta is not None
-                and resolve_metric(metric) == imeta.get("metric"))
-            from .index import MV_KINDS  # noqa: PLC0415
 
-            kind_ok = imeta is not None and imeta.get("kind") in MV_KINDS
-            if use_index == "always":
-                if not kind_ok or not fresh or not metric_ok:
-                    raise ValueError(
-                        f"use_index='always' but the multivector index for "
-                        f"{collection!r}/{vector_name!r} is "
-                        + ("absent" if imeta is None
-                           else f"kind {imeta['kind']!r} (need one of "
-                           f"{MV_KINDS})"
-                           if not kind_ok
-                           else "stale" if not fresh
-                           else f"built for metric {imeta['metric']!r}")
-                        + "; build_vector_index(kind='ivf_mv') or search "
-                        "with use_index='auto'")
-                usable = True
-            else:
-                usable = kind_ok and fresh and metric_ok
-            if usable:
-                return search_indexed(
-                    spark, root, collection, queries, k=k,
-                    vector_name=vector_name, n_probe=n_probe,
-                    query_id=query_id, query_vec=query_vec,
-                    exclude_self=exclude_self, tenant=tenant,
-                    rerank_factor=rerank_factor,
-                    rescore=rescore, oversampling=oversampling,
-                    probe_per_token=probe_per_token)
-        if probe_per_token:
-            # the silently-ignored-knob refusal, mirrored from the
-            # single-vector tail (round 14, ADVICE r13 #3): 'auto' with
-            # an absent/stale mv index resolves to the exact max-sim
-            # scan, which has no probe stage to widen
-            raise ValueError(
-                "probe_per_token tunes the ivf_mv artifact's probe — "
-                "this search resolved to the exact max-sim scan (no "
-                "fresh multivector index); build/refresh the index, "
-                "search with use_index='always', or drop the flag "
-                "(the silently-ignored-knob refusal)")
-        corpus = read_collection(spark, root, collection, tenant=tenant)
-        if vectorized != False and _maxsim_blas_ok(  # noqa: E712
-                vectorized, queries, query_id, corpus, corpus_id):
-            return knn_join_maxsim_vectorized(
-                queries, corpus, k=k, query_id=query_id,
-                query_vec=query_vec, corpus_id=corpus_id,
-                corpus_vec=vector_name, metric=metric or declared,
-                exclude_self=exclude_self)
-        return knn_join_maxsim(
-            queries, corpus, k=k, query_id=query_id, query_vec=query_vec,
-            corpus_id=corpus_id, corpus_vec=vector_name,
-            metric=metric or declared, exclude_self=exclude_self)
-    if use_index in ("auto", "always"):
-        imeta = vector_index_meta(root, collection, vector_name,
-                                  tenant=tenant)
-        fresh = index_is_fresh(root, collection, vector_name, tenant=tenant)
-        metric_ok = metric is None or (
-            imeta is not None
-            and resolve_metric(metric) == imeta.get("metric"))
-        if use_index == "always":
-            if imeta is None or not fresh or not metric_ok:
-                raise ValueError(
-                    f"use_index='always' but the index for {collection!r}/"
-                    f"{vector_name!r}"
-                    + (f" (tenant {tenant!r})" if tenant is not None else "")
-                    + " is "
-                    + ("absent" if imeta is None
-                       else "stale" if not fresh
-                       else f"built for metric {imeta['metric']!r}")
-                    + "; build_vector_index"
-                    + ("(tenant=...)" if tenant is not None else "")
-                    + " or search with use_index='auto'")
-            usable = True
-        else:
-            usable = imeta is not None and fresh and metric_ok
-        if usable:
-            return search_indexed(
-                spark, root, collection, queries, k=k,
-                vector_name=vector_name, n_probe=n_probe,
-                query_id=query_id, query_vec=query_vec,
-                exclude_self=exclude_self, tenant=tenant,
-                rerank_factor=rerank_factor,
-                rescore=rescore, oversampling=oversampling,
-                probe_per_token=probe_per_token)
+def _run_route(spark: SparkSession, root: str, collection: str,
+               queries: DataFrame, route: Route, *, k: int, query_id: str,
+               query_vec: str, corpus_id: str, exclude_self: bool,
+               n_probe: int | None, rerank_factor: int,
+               tenant: str | None, vectorized: str | bool = "auto",
+               rescore: bool = True, oversampling: float | None = None,
+               probe_per_token: bool = False) -> DataFrame:
+    """Run a resolved unfiltered route: probe ``route.imeta`` or scan."""
+    from .index import search_indexed  # noqa: PLC0415
+    from .upsert import read_collection  # noqa: PLC0415
+
+    if route.imeta is not None:
+        return search_indexed(
+            spark, root, collection, queries, k=k,
+            vector_name=route.vector_name, n_probe=n_probe,
+            query_id=query_id, query_vec=query_vec,
+            exclude_self=exclude_self, tenant=tenant,
+            rerank_factor=rerank_factor, rescore=rescore,
+            oversampling=oversampling, probe_per_token=probe_per_token)
     if probe_per_token:
+        # the silently-ignored-knob refusal (round 14, ADVICE r13 #3):
+        # the exact scan has no probe stage to widen
         raise ValueError(
             "probe_per_token widens a multivector artifact's pooled "
-            "probe — this search resolved to a single-vector or exact "
-            "path that can't honor it (the silently-ignored-knob "
-            "refusal)")
-    if metric is None:
-        metric = declared
+            "probe — this search resolved to the exact scan (no fresh "
+            "multivector index); build/refresh the index, search with "
+            "use_index='always', or drop the flag (the "
+            "silently-ignored-knob refusal)")
     corpus = read_collection(spark, root, collection, tenant=tenant)
-    return knn_join(
-        queries, corpus, k=k, query_id=query_id, query_vec=query_vec,
-        corpus_id=corpus_id, corpus_vec=vector_name,
-        exclude_self=exclude_self, metric=metric,
-    )
+    return exact_scan(queries, corpus, route, k=k, query_id=query_id,
+                      query_vec=query_vec, corpus_id=corpus_id,
+                      exclude_self=exclude_self, vectorized=vectorized)
 
 
 def _maxsim_blas_ok(mode, queries: DataFrame, query_id: str,

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .knn import knn_join, resolve_metric
+from .knn import _declared_space, knn_join, resolve_metric
 from .upsert import collection_meta, read_collection
 
 
@@ -98,21 +98,13 @@ def _collection_frame(spark: SparkSession, root: str, collection: str,
     from .filters import as_filter  # noqa: PLC0415
 
     meta = collection_meta(root, collection) or {}
-    vectors = meta.get("vectors", {})
-    if vector_name is None:
-        if len(vectors) != 1:
-            raise ValueError(
-                f"collection {collection!r} declares {sorted(vectors)} "
-                f"vector spaces; pass vector_name")
-        vector_name = next(iter(vectors))
-    if str(vectors.get(vector_name, {}).get("kind", "")).lower() \
-            == "sparse" or \
-            vectors.get(vector_name, {}).get("multivector") is not None:
+    vector_name, cfg = _declared_space(meta, collection, vector_name)
+    if str(cfg.get("kind", "")).lower() == "sparse" \
+            or cfg.get("multivector") is not None:
         raise ValueError(
             f"search_matrix samples a DENSE space; "
             f"{collection!r}/{vector_name!r} isn't one")
-    metric = resolve_metric(
-        vectors.get(vector_name, {}).get("distance", "cosine"))
+    metric = resolve_metric(cfg.get("distance", "cosine"))
     df = read_collection(spark, root, collection, tenant=tenant)
     if flt is not None:
         df = df.filter(as_filter(flt).to_column())

@@ -1374,20 +1374,10 @@ def filtered_search_indexed(spark: SparkSession, root: str, collection: str,
     fetching when most points match).  ``max_candidates`` is a loud
     selectivity bound (checked via a distributed count — candidate ids
     never materialize on the driver)."""
-    from .knn import knn_join, resolve_metric  # noqa: PLC0415
+    from .knn import _resolve_search_space, knn_join  # noqa: PLC0415
 
-    meta = collection_meta(root, collection) or {}
-    id_col = meta.get("id_col", "id")
-    if vector_name is None:
-        vectors = meta.get("vectors", {})
-        if len(vectors) == 1:
-            vector_name = next(iter(vectors))
-        else:
-            raise ValueError(
-                f"collection {collection!r} declares {sorted(vectors)} "
-                f"vector spaces; pass vector_name")
-    metric = resolve_metric(
-        meta.get("vectors", {}).get(vector_name, {}).get("distance", "cosine"))
+    meta, id_col, vector_name, metric = _resolve_search_space(
+        root, collection, vector_name)
 
     cand = payload_match_ids(spark, root, collection, column, values)
     # both driver interactions stay O(small): the selectivity guard is a

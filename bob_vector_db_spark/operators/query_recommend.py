@@ -21,10 +21,10 @@ from .upsert import (
     read_rows_for_ids,
 )
 
+from .knn import _resolve_search_space
 from .query_search import (
     _group_topk,
     _resolve_lookup,
-    _resolve_search_space,
     search_groups,
 )
 

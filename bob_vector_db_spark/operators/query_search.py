@@ -42,6 +42,8 @@ from .filters import (
     filter_match_ids,
     has_literal_id_leaves,
 )
+from .index import KINDS
+from .knn import Route, _resolve_search_space
 from .localframe import local_frame
 from .upsert import (
     collection_meta,
@@ -236,10 +238,9 @@ def search_text_points(spark: SparkSession, root: str, collection: str,
 
 
 def _filtered_indexed_search(spark: SparkSession, root: str, collection: str,
-                             queries: DataFrame, flt, k: int,
-                             vector_name: str, metric: str, query_id: str,
-                             query_vec: str, round_to: int | None,
-                             use_index, use_payload_index,
+                             queries: DataFrame, flt, k: int, route: Route,
+                             query_id: str, query_vec: str,
+                             round_to: int | None, use_payload_index,
                              n_probe: int | None,
                              rerank_factor: int,
                              index_candidate_threshold: int,
@@ -248,50 +249,32 @@ def _filtered_indexed_search(spark: SparkSession, root: str, collection: str,
                              rescore: bool = True,
                              oversampling: float | None = None,
                              ) -> tuple[DataFrame | None, tuple | None]:
-    """Compose the payload index with the persisted ANN artifact: filter →
-    candidate ids (pruned posting probes), residual conditions evaluated on
-    a bucket-pruned fetch of those ids, and the final id set semi-joined
-    INSIDE the probed ``list_id`` partitions of the vector index
-    (``index.search_indexed(candidate_ids=...)``) — the two prunings
-    in one plan.
+    """Compose the payload index with the route's fresh ANN artifact
+    (``route.imeta``): filter → candidate ids (pruned posting probes),
+    residual conditions evaluated on a bucket-pruned fetch of those ids,
+    and the final id set semi-joined INSIDE the probed ``list_id``
+    partitions of the vector index
+    (``index.search_indexed(candidate_ids=...)``) — the two prunings in
+    one plan.
 
     Returns ``(result | None, resolution | None)``: result None when
-    "auto" decides the exact path wins (unusable index, or a candidate
-    set small enough that the bucket-pruned exact fetch is cheaper AND
-    exact) — then ``resolution`` carries the already-computed
-    ``(ids, residual, n_cand)`` so the exact path doesn't re-probe the
-    postings.  Raises under "always" when composition can't run."""
-    from .index import (  # noqa: PLC0415
-        index_is_fresh,
-        search_indexed,
-        vector_index_meta,
-    )
+    "auto" decides the exact path wins (no payload-index route, or a
+    candidate set small enough that the bucket-pruned exact fetch is
+    cheaper AND exact) — then ``resolution`` carries the
+    already-computed ``(ids, residual, n_cand)`` so the exact path
+    doesn't re-probe the postings.  Raises under "always" when
+    composition can't run."""
+    from .index import search_indexed  # noqa: PLC0415
 
-    def fail(msg: str):
-        if use_index == "always":
-            raise ValueError(msg)
-        return None, None
-
-    imeta = vector_index_meta(root, collection, vector_name, tenant)
-    if imeta is None or not index_is_fresh(root, collection, vector_name,
-                                           tenant):
-        return fail(
-            f"use_index='always' but the vector index for {collection!r}/"
-            f"{vector_name!r}"
-            + (f" (tenant {tenant!r})" if tenant is not None else "")
-            + (" is stale" if imeta is not None else " is absent")
-            + "; build_vector_index / refresh_vector_index first")
-    if imeta.get("metric") != metric:
-        return fail(
-            f"vector index for {collection!r}/{vector_name!r} was built "
-            f"for metric {imeta.get('metric')!r}, not {metric!r}")
     if use_payload_index is False:
-        return fail(
-            "use_index='always' needs the payload-index candidate path; "
-            "use_payload_index=False disables it")
+        if route.always:
+            raise ValueError(
+                "use_index='always' needs the payload-index candidate "
+                "path; use_payload_index=False disables it")
+        return None, None
     ids, residual = filter_match_ids(spark, root, collection, flt)
     if ids is None:
-        if use_index == "always":
+        if route.always:
             raise ValueError(
                 f"use_index='always' but no top-level must leaf of the "
                 f"filter has a fresh payload index on {collection!r}; "
@@ -310,7 +293,7 @@ def _filtered_indexed_search(spark: SparkSession, root: str, collection: str,
     mat = materialize_small(spark, ids)
     over_cap = mat is ids  # identity return = the lazy fallback fired
     ids = mat
-    if use_index != "always":
+    if not route.always:
         # past the materialize cap the candidate set is certainly above
         # the (much smaller) threshold — skip the count; downstream
         # consumers that need an exact n recount lazily
@@ -319,7 +302,7 @@ def _filtered_indexed_search(spark: SparkSession, root: str, collection: str,
             # few candidates: the pruned exact fetch is the plan — hand
             # the resolution back so it isn't recomputed
             return None, (ids, residual, n_cand)
-        if n_probe is None and imeta.get("kind") == "ivf":
+        if n_probe is None and route.imeta["kind"] == "ivf":
             # full probe over the FLOAT artifact reads as much as the
             # pushed-predicate scan and adds a semi-join — no IO win, so
             # 'auto' declines; composition pays when the probe narrows
@@ -330,7 +313,7 @@ def _filtered_indexed_search(spark: SparkSession, root: str, collection: str,
     final_ids = _final_filter_ids(spark, root, collection, ids, residual,
                                   id_col, tenant=tenant)
     return search_indexed(spark, root, collection, queries, k=k,
-                          vector_name=vector_name, n_probe=n_probe,
+                          vector_name=route.vector_name, n_probe=n_probe,
                           query_id=query_id, query_vec=query_vec,
                           exclude_self=False, round_to=round_to,
                           rerank_factor=rerank_factor,
@@ -358,73 +341,58 @@ def search_points(spark: SparkSession, root: str, collection: str,
                   oversampling: float | None = None,
                   strict=None) -> DataFrame:
     """Filtered kNN with the collection's declared metric — the Qdrant
-    ``search(query_vector, query_filter=Filter(...))`` twin.  With no
-    filter this defers to ``knn.search_collection`` (which may dispatch
-    to the vector index); with one, the filter resolves FIRST (Qdrant's
-    filtered-search order) through the payload index when selective,
-    else as a pushed predicate on the exact scan.
+    ``search(query_vector, query_filter=Filter(...))`` twin.
+    :func:`knn.resolve_route` decides, once, between the persisted ANN
+    artifact and the exact scan (``use_index``, ``tenant`` and the
+    quantization params — the ``knn.search_collection`` contract).  With
+    no filter the route runs as in ``search_collection``; with one, the
+    filter resolves FIRST (Qdrant's filtered-search order) through the
+    payload index when selective, else as a pushed predicate on the
+    exact scan.
 
-    ``use_index`` additionally lets the FILTERED search compose with the
-    persisted ANN artifact (Qdrant's filtered-HNSW twin): the filter's
-    candidate ids semi-join INSIDE the probed ``list_id`` partitions of
-    the vector index and only the survivors score/rescore — both
-    prunings in one plan.  "auto" (default) composes only when the
-    filter resolves through a fresh payload index AND matches more than
-    ``index_candidate_threshold`` points — below that the bucket-pruned
-    exact fetch is the better plan (and exact) — AND the probe actually
-    narrows IO (an explicit ``n_probe``, or a quantized artifact kind;
-    a full probe over the float ivf artifact reads as much as the
-    pushed scan); "always" requires the composed plan (raises when
-    either index is missing/stale); False never touches the ANN
-    artifact.  ``n_probe=None`` probes every list,
+    A filtered search whose route holds an index composes the two
+    (Qdrant's filtered-HNSW twin): the filter's candidate ids semi-join
+    INSIDE the probed ``list_id`` partitions of the vector index and
+    only the survivors score/rescore — both prunings in one plan.
+    "auto" composes only when the filter resolves through a fresh
+    payload index AND matches more than ``index_candidate_threshold``
+    points — below that the bucket-pruned exact fetch is the better
+    plan (and exact) — AND the probe actually narrows IO (an explicit
+    ``n_probe``, or a quantized artifact kind; a full probe over the
+    float ivf artifact reads as much as the pushed scan); "always"
+    requires the composed plan.  ``n_probe=None`` probes every list,
     so a composed search with full probe stays EXACT over the filtered
     set (ivf — rescoring kinds like ivf_mv/ivf_sq/ivf_pq additionally
     need a COVERING ``rerank_factor``: ``rerank_factor*k`` ≥ the
     filtered point count — Qdrant's quantization ``oversampling`` knob,
     threaded to the artifact's rescore stage).
 
-    ``score_threshold`` drops hits past the quality floor (better-than
-    semantics follow the metric: >= for cosine/dot, <= for euclid);
-    ``offset`` skips the first hits for paged search (ranks re-number
-    from 1) — both post-rank cuts, exactly Qdrant's search params.
-    ``with_payload`` (True, or a list of column names) joins each hit's
-    payload back on via the bucket-pruned fetch (:func:`attach_payload`)
-    — the Qdrant hit shape with payload attached; ``with_vectors``
-    (True, or a list of space names) likewise attaches the stored
-    vector data (:func:`attach_vectors`).
+    ``score_threshold``, ``offset``, ``with_payload`` and
+    ``with_vectors`` are Qdrant's post-rank search params, applied by
+    :func:`shape_page`: the threshold cuts in the metric's direction
+    (>= for cosine/dot, <= for euclid), ``offset`` skips the first hits
+    (ranks re-number from 1), and the return flags attach each hit's
+    payload / stored vectors through the bucket-pruned fetch.
 
     ``rescore`` / ``oversampling`` (round 13) are Qdrant's
     ``QuantizationSearchParams``, threaded to the stored quantized
     artifact: ``rescore=False`` returns the quantized-score ranking
     (sq/pq/bq families — no exact-rescore fetch), ``oversampling``
-    sizes the candidate stage at ``ceil(oversampling·k)``.  A
-    non-default value forces ``use_index='always'`` — the exact scan
-    has no quantized stage to honor them with.
+    sizes the candidate stage at ``ceil(oversampling·k)``.
 
     ``strict`` (round 13 — Qdrant ``StrictModeConfig``): True applies
     the default :class:`operators.strict.StrictMode` caps (refuse
     unindexed driving filters, cap limit/offset, refuse full-probe /
     exact scans over quantized spaces); pass an instance to tune.  All
     checks are driver-side metadata reads — a refusal costs no job."""
-    from .knn import knn_join, resolve_metric, search_collection  # noqa: PLC0415
+    from .knn import _run_route, exact_scan, resolve_route  # noqa: PLC0415
 
     meta = collection_meta(root, collection) or {}
-    vectors = meta.get("vectors", {})
-    if vector_name is None:
-        if len(vectors) != 1:
-            raise ValueError(
-                f"collection {collection!r} declares {sorted(vectors)} "
-                f"vector spaces; pass vector_name")
-        vector_name = next(iter(vectors))
-    if str(vectors.get(vector_name, {}).get("kind", "")).lower() \
-            == "sparse":
-        raise ValueError(
-            f"space {collection!r}/{vector_name!r} is SPARSE — a dense "
-            f"query vector can't search it; pass a sparse query "
-            f"({{'nearest': {{'indices': [...], 'values': [...]}}}}) "
-            f"through query_points, or search_sparse_points directly")
-    metric = resolve_metric(
-        vectors.get(vector_name, {}).get("distance", "cosine"))
+    id_col = meta.get("id_col", "id")
+    route = resolve_route(root, collection, vector_name, tenant=tenant,
+                          use_index=use_index, rescore=rescore,
+                          oversampling=oversampling, meta=meta)
+    vector_name = route.vector_name
     from .strict import resolve_strict_for  # noqa: PLC0415
 
     _sm = resolve_strict_for(root, collection, strict)
@@ -435,30 +403,15 @@ def search_points(spark: SparkSession, root: str, collection: str,
         strict_mod.check_filter(spark, root, collection, flt, _sm)
         strict_mod.check_probe(root, collection, vector_name, tenant,
                                _sm, n_probe, use_index)
-    if use_index is True:  # the bool complement of False, on BOTH branches
-        use_index = "always"
-    if not rescore or oversampling is not None:
-        # quantization search params describe the stored artifact; the
-        # exact paths can't honor them — require the composed plan
-        if use_index is False:
-            raise ValueError(
-                "rescore=False / oversampling describe the quantized "
-                "artifact's search — they can't combine with "
-                "use_index=False (the exact scan has no quantized "
-                "stage)")
-        use_index = "always"
     if flt is None:
-        out = search_collection(spark, root, collection, queries,
-                                k=k + offset,
-                                vector_name=vector_name, query_id=query_id,
-                                query_vec=query_vec, tenant=tenant,
-                                use_index=("auto" if use_index is None
-                                           else use_index),
-                                n_probe=n_probe,
-                                rerank_factor=rerank_factor,
-                                rescore=rescore, oversampling=oversampling)
+        out = _run_route(spark, root, collection, queries, route,
+                         k=k + offset, query_id=query_id,
+                         query_vec=query_vec, corpus_id=id_col,
+                         exclude_self=False, n_probe=n_probe,
+                         rerank_factor=rerank_factor, tenant=tenant,
+                         rescore=rescore, oversampling=oversampling)
         if round_to is not None and round_to < 6:
-            # search_collection's scorers round to the repo-wide 6;
+            # the unfiltered route's scorers round to the repo-wide 6;
             # honor a COARSER round_to by re-rounding (ranks computed at
             # 6 stay — a deterministic refinement of the coarser ties).
             # A finer-than-6 request cannot recover precision on this
@@ -467,14 +420,12 @@ def search_points(spark: SparkSession, root: str, collection: str,
             # knn_join directly, which thread round_to natively.
             out = out.withColumn("sim", F.round("sim", int(round_to)))
     else:
-        id_col = meta.get("id_col", "id")
         out, resolution = None, None
-        if use_index not in (False, None):
+        if route.imeta is not None:
             out, resolution = _filtered_indexed_search(
-                spark, root, collection, queries, flt, k + offset,
-                vector_name, metric, query_id, query_vec, round_to,
-                use_index, use_payload_index, n_probe, rerank_factor,
-                index_candidate_threshold, tenant, id_col,
+                spark, root, collection, queries, flt, k + offset, route,
+                query_id, query_vec, round_to, use_payload_index, n_probe,
+                rerank_factor, index_candidate_threshold, tenant, id_col,
                 rescore=rescore, oversampling=oversampling)
         if out is None:
             cand, _residual = _resolve_candidates(
@@ -486,58 +437,48 @@ def search_points(spark: SparkSession, root: str, collection: str,
                           .filter(as_filter(flt).to_column()))
             else:
                 corpus = _scope_tenant(root, collection, cand, tenant)
-            if vectors.get(vector_name, {}).get("multivector") is not None:
-                from .knn import (  # noqa: PLC0415
-                    _maxsim_blas_ok,
-                    knn_join_maxsim,
-                    knn_join_maxsim_vectorized,
-                )
+            out = exact_scan(queries, corpus.select(id_col, vector_name),
+                             route, k=k + offset, query_id=query_id,
+                             query_vec=query_vec, corpus_id=id_col,
+                             round_to=round_to)
+    cut_metric = route.metric
+    if not rescore and KINDS[route.imeta["kind"]].quant in ("pq", "bq"):
+        # rescore=False pages carry the QUANTIZED score: bq/pq kinds
+        # emit distances (Hamming / ADC — lower is better), so the
+        # threshold cuts as an upper bound there; sq emits the metric
+        # score and keeps its native direction
+        cut_metric = "euclid"
+    return shape_page(spark, root, collection, out, offset, score_threshold,
+                      "sim", cut_metric, with_payload, with_vectors,
+                      "vec_id", meta)
 
-                # the same vectorized='auto' dual as search_collection:
-                # BLAS when the id contract holds, expression form (the
-                # oracle contract) otherwise
-                scorer = (knn_join_maxsim_vectorized
-                          if _maxsim_blas_ok("auto", queries, query_id,
-                                             corpus, id_col)
-                          else knn_join_maxsim)
-                out = scorer(
-                    queries, corpus.select(id_col, vector_name),
-                    k=k + offset, query_id=query_id, query_vec=query_vec,
-                    corpus_id=id_col, corpus_vec=vector_name,
-                    metric=metric, exclude_self=False, round_to=round_to)
-            else:
-                out = knn_join(queries,
-                               corpus.select(id_col, vector_name),
-                               k=k + offset,
-                               query_id=query_id, query_vec=query_vec,
-                               corpus_id=id_col, corpus_vec=vector_name,
-                               exclude_self=False, round_to=round_to,
-                               metric=metric)
+
+def shape_page(spark: SparkSession, root: str, collection: str,
+               out: DataFrame, offset: int = 0,
+               score_threshold: float | None = None,
+               score_col: str = "sim", metric: str = "dot",
+               with_payload: bool | list = False,
+               with_vectors: bool | list = False,
+               id_col_out: str = "vec_id",
+               meta: dict | None = None) -> DataFrame:
+    """Post-rank page shaping — Qdrant's search params, shared by every
+    ranked surface: ``offset`` skips the first hits (ranks re-number
+    from 1), ``score_threshold`` cuts ``score_col`` in ``metric``'s
+    native direction (:func:`_native_cut`; "dot" for any
+    larger-is-better score), then ``with_payload`` / ``with_vectors``
+    attach each hit's payload / stored vectors by ``id_col_out``."""
     if offset:
         out = (out.filter(F.col("rank") > offset)
                .withColumn("rank", F.col("rank") - F.lit(int(offset))))
     if score_threshold is not None:
-        cut_metric = metric
-        if not rescore:
-            # rescore=False pages carry the QUANTIZED score: bq/pq
-            # kinds emit distances (Hamming / ADC — lower is better),
-            # so the threshold cuts as an upper bound there; sq emits
-            # the metric score and keeps its native direction
-            from .index import KINDS, vector_index_meta  # noqa: PLC0415
-
-            _im = vector_index_meta(root, collection, vector_name,
-                                    tenant) or {}
-            _spec = KINDS.get(_im.get("kind"))
-            if _spec is not None and _spec.quant in ("pq", "bq"):
-                cut_metric = "euclid"
-        out = out.filter(_native_cut(F.col("sim"), score_threshold,
-                                     cut_metric))
+        out = out.filter(_native_cut(F.col(score_col), score_threshold,
+                                     metric))
     if with_payload:
-        out = attach_payload(spark, root, collection, out,
-                             with_payload, meta=meta)
+        out = attach_payload(spark, root, collection, out, with_payload,
+                             id_col_out=id_col_out, meta=meta)
     if with_vectors:
-        out = attach_vectors(spark, root, collection, out,
-                             with_vectors, meta=meta)
+        out = attach_vectors(spark, root, collection, out, with_vectors,
+                             id_col_out=id_col_out, meta=meta)
     return out
 
 
@@ -1175,15 +1116,8 @@ def search_points_mmr(spark: SparkSession, root: str, collection: str,
     checks run HERE, once, and the inner pool fetch skips them."""
     from .knn import mmr_rerank  # noqa: PLC0415
 
-    meta = collection_meta(root, collection) or {}
-    id_col = meta.get("id_col", "id")
-    vectors = meta.get("vectors", {})
-    if vector_name is None:
-        if len(vectors) != 1:
-            raise ValueError(
-                f"collection {collection!r} declares {sorted(vectors)} "
-                f"vector spaces; pass vector_name")
-        vector_name = next(iter(vectors))
+    _, id_col, vector_name, _ = _resolve_search_space(
+        root, collection, vector_name)
     from . import strict as strict_mod  # noqa: PLC0415
 
     _sm = strict_mod.check_entry(spark, root, collection, strict,
@@ -1212,41 +1146,6 @@ def search_points_mmr(spark: SparkSession, root: str, collection: str,
                .join(F.broadcast(cand.select("qid", "vec_id", "sim")),
                      "vec_id"))
     return mmr_rerank(withvec, k=k, lambda_=lambda_)
-
-
-def _resolve_search_space(root: str, collection: str,
-                          vector_name: str | None):
-    """Resolve the searched dense space — the boilerplate shared by
-    search_groups / recommend_points / recommend_groups / the
-    discover-context scan: collection meta, id column, the (only or
-    named) vector space, and its declared metric.
-    Returns (meta, id_col, vector_name, metric)."""
-    from .knn import resolve_metric  # noqa: PLC0415
-
-    meta = collection_meta(root, collection) or {}
-    id_col = meta.get("id_col", "id")
-    vectors = meta.get("vectors", {})
-    if vector_name is None:
-        if len(vectors) != 1:
-            raise ValueError(
-                f"collection {collection!r} declares {sorted(vectors)} "
-                f"vector spaces; pass vector_name")
-        vector_name = next(iter(vectors))
-    cfg = vectors.get(vector_name, {})
-    if str(cfg.get("kind", "")).lower() == "sparse":
-        # the dense surface (search/recommend/discover/context/groups)
-        # has no meaning over a posting-list space — refuse HERE, once,
-        # so every caller gets the same message instead of a deep
-        # shape error (recommend can't average postings, discover
-        # can't triplet-score them, ...)
-        raise ValueError(
-            f"space {collection!r}/{vector_name!r} is SPARSE — this "
-            f"operation needs a dense (or multivector) space; query a "
-            f"sparse space with a sparse nearest node "
-            f"({{'nearest': {{'indices': [...], 'values': [...]}}, "
-            f"'using': {vector_name!r}}}) or search_sparse_points")
-    metric = resolve_metric(cfg.get("distance", "cosine"))
-    return meta, id_col, vector_name, metric
 
 
 def _resolve_sparse_space(root: str, collection: str,

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .filters import as_filter
+from .knn import _resolve_search_space
 from .localframe import local_frame
 from .upsert import (
     collection_meta,
@@ -40,16 +41,14 @@ from .query_search import (
     _check_spec_keys,
     _native_cut,
     _resolve_lookup,
-    _resolve_search_space,
     _resolve_sparse_space,
     _sparse_query_postings,
     _vec_query_df,
-    attach_payload,
-    attach_vectors,
     sample_points,
     search_points,
     search_sparse_points,
     search_text_points,
+    shape_page,
 )
 
 
@@ -195,18 +194,9 @@ def query_points(spark: SparkSession, root: str, collection: str,
             spark, root, collection, list(prefetch), query["formula"],
             defaults=query.get("defaults"), k=k + int(offset),
             round_to=round_to)
-        if offset:
-            out = (out.filter(F.col("rank") > offset)
-                   .withColumn("rank", F.col("rank") - F.lit(int(offset))))
-        if score_threshold is not None:
-            out = out.filter(F.col("score") >= float(score_threshold))
-        if with_payload:
-            out = attach_payload(spark, root, collection, out,
-                                 with_payload, id_col_out="id")
-        if with_vectors:
-            out = attach_vectors(spark, root, collection, out,
-                                 with_vectors, id_col_out="id")
-        return out
+        return shape_page(spark, root, collection, out, offset,
+                          score_threshold, "score", "dot", with_payload,
+                          with_vectors, "id")
     if isinstance(query, dict) and "nearest" in query:
         # Qdrant NearestQuery node.  WITH prefetch this is the Query
         # API's two-stage shape — the branches retrieve, the nearest
@@ -236,13 +226,9 @@ def query_points(spark: SparkSession, root: str, collection: str,
                 use_payload_index=use_payload_index,
                 lookup_from_collection=lookup_from_collection,
                 lookup_from_vector=lookup_from_vector)
-            if with_payload:
-                out = attach_payload(spark, root, collection, out,
-                                     with_payload, id_col_out="vec_id")
-            if with_vectors:
-                out = attach_vectors(spark, root, collection, out,
-                                     with_vectors, id_col_out="vec_id")
-            return out
+            return shape_page(spark, root, collection, out,
+                              with_payload=with_payload,
+                              with_vectors=with_vectors)
         if isinstance(spec, dict):
             # Qdrant SparseVector terminal query — the persisted
             # sparse index serves it (dim-bucket pruned probe,
@@ -273,19 +259,9 @@ def query_points(spark: SparkSession, root: str, collection: str,
                 k=k + int(offset), indices_col=icol, round_to=round_to,
                 use_payload_index=use_payload_index,
                 strict=False)  # checks ran at this entry
-            if offset:
-                out = (out.filter(F.col("rank") > offset)
-                       .withColumn("rank",
-                                   F.col("rank") - F.lit(int(offset))))
-            if score_threshold is not None:
-                out = out.filter(F.col("sim") >= float(score_threshold))
-            if with_payload:
-                out = attach_payload(spark, root, collection, out,
-                                     with_payload, id_col_out="vec_id")
-            if with_vectors:
-                out = attach_vectors(spark, root, collection, out,
-                                     with_vectors, id_col_out="vec_id")
-            return out
+            return shape_page(spark, root, collection, out, offset,
+                              score_threshold, "sim", "dot", with_payload,
+                              with_vectors)
         if prefetch is None:
             qdf = (_vec_query_df(spark, spec)
                    if isinstance(spec, (list, tuple))
@@ -316,21 +292,11 @@ def query_points(spark: SparkSession, root: str, collection: str,
             round_to=round_to,
             lookup_from_collection=lookup_from_collection,
             lookup_from_vector=lookup_from_vector)
-        if offset:
-            out = (out.filter(F.col("rank") > offset)
-                   .withColumn("rank", F.col("rank") - F.lit(int(offset))))
-        if score_threshold is not None:
-            _, _, _, _m = _resolve_search_space(
-                root, collection, vector_name)
-            out = out.filter(_native_cut(F.col("score"),
-                                         score_threshold, _m))
-        if with_payload:
-            out = attach_payload(spark, root, collection, out,
-                                 with_payload, id_col_out="vec_id")
-        if with_vectors:
-            out = attach_vectors(spark, root, collection, out,
-                                 with_vectors, id_col_out="vec_id")
-        return out
+        cut = ("dot" if score_threshold is None else
+               _resolve_search_space(root, collection, vector_name)[3])
+        return shape_page(spark, root, collection, out, offset,
+                          score_threshold, "score", cut, with_payload,
+                          with_vectors)
     if isinstance(query, dict):
         # Qdrant universal-API query NODES: RecommendInput /
         # DiscoverInput / ContextInput / SampleQuery — terminal queries
@@ -346,6 +312,7 @@ def query_points(spark: SparkSession, root: str, collection: str,
                 "query_points(prefetch=[{'recommend': ...}, ...], "
                 "fusion='rrf'))")
         n_pre = k + int(offset)
+        cut = "dot"  # larger-is-better scores (recommend may override)
         if kind == "sample":
             spec = query["sample"]
             seed = "" if (spec is True or spec == "random") else str(spec)
@@ -389,16 +356,11 @@ def query_points(spark: SparkSession, root: str, collection: str,
                 # average_vector IS a search by the synthetic vector, so
                 # its score carries the metric's native order — on a
                 # euclid/manhattan collection that is a DISTANCE ranked
-                # ascending and the threshold is an UPPER bound (the
-                # search_points cut at the top of this module); >= would
+                # ascending and the threshold is an UPPER bound; >= would
                 # keep the worst hits.  best_score/sum_scores fold
                 # negated distances (descending) so >= stays right.
-                _, _, _, _m = _resolve_search_space(
-                    root, collection, vector_name)
-                if _m in ("euclid", "manhattan"):
-                    out = out.filter(
-                        F.col(score_col) <= float(score_threshold))
-                    score_threshold = None
+                cut = _resolve_search_space(root, collection,
+                                            vector_name)[3]
         elif kind == "discover":
             if score_threshold is not None:
                 raise ValueError(
@@ -429,18 +391,9 @@ def query_points(spark: SparkSession, root: str, collection: str,
                 lookup_from_vector=lookup_from_vector,
                 strict=False)  # checks ran at this entry
             score_col = "ctx_score"
-        if offset:
-            out = (out.filter(F.col("rank") > offset)
-                   .withColumn("rank", F.col("rank") - F.lit(int(offset))))
-        if score_threshold is not None:
-            out = out.filter(F.col(score_col) >= float(score_threshold))
-        if with_payload:
-            out = attach_payload(spark, root, collection, out,
-                                 with_payload, id_col_out="vec_id")
-        if with_vectors:
-            out = attach_vectors(spark, root, collection, out,
-                                 with_vectors, id_col_out="vec_id")
-        return out
+        return shape_page(spark, root, collection, out, offset,
+                          score_threshold, score_col, cut, with_payload,
+                          with_vectors)
     if (query is None) == (prefetch is None):
         raise ValueError("query_points takes exactly one of query= (a "
                          "DataFrame or a point id) or prefetch= (a fusion "
@@ -460,18 +413,9 @@ def query_points(spark: SparkSession, root: str, collection: str,
         # the search params apply to the FUSED ranking (Qdrant applies
         # limit/offset/threshold after fusion): rrf/dbsf scores both
         # rank descending, so the threshold is a lower bound
-        if offset:
-            out = (out.filter(F.col("rank") > offset)
-                   .withColumn("rank", F.col("rank") - F.lit(int(offset))))
-        if score_threshold is not None:
-            out = out.filter(F.col("score") >= float(score_threshold))
-        if with_payload:
-            out = attach_payload(spark, root, collection, out,
-                                 with_payload, id_col_out="id")
-        if with_vectors:
-            out = attach_vectors(spark, root, collection, out,
-                                 with_vectors, id_col_out="id")
-        return out
+        return shape_page(spark, root, collection, out, offset,
+                          score_threshold, "score", "dot", with_payload,
+                          with_vectors, "id")
     if isinstance(query, DataFrame):
         return search_points(spark, root, collection, query, flt=flt, k=k,
                              vector_name=vector_name, round_to=round_to,
@@ -484,15 +428,9 @@ def query_points(spark: SparkSession, root: str, collection: str,
                              rescore=rescore, oversampling=oversampling,
                              strict=False)  # checks ran at this entry
     # query by stored point id
-    meta = collection_meta(root, collection) or {}
-    id_col = meta.get("id_col", "id")
+    meta, _, vector_name, _ = _resolve_search_space(root, collection,
+                                                    vector_name)
     vectors = meta.get("vectors", {})
-    if vector_name is None:
-        if len(vectors) != 1:
-            raise ValueError(
-                f"collection {collection!r} declares {sorted(vectors)} "
-                f"vector spaces; pass vector_name")
-        vector_name = next(iter(vectors))
     # LookupLocation: the id resolves in the lookup collection/space
     # (defaults: this collection, the searched space)
     lk_coll, same_coll, lk_meta, lk_vec = _resolve_lookup(
@@ -555,14 +493,9 @@ def query_points(spark: SparkSession, root: str, collection: str,
     w = Window.partitionBy("qid").orderBy("rank")
     kept = (kept.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k + int(offset)))
-    if offset:
-        kept = (kept.filter(F.col("rank") > offset)
-                .withColumn("rank", F.col("rank") - F.lit(int(offset))))
-    if with_payload:
-        kept = attach_payload(spark, root, collection, kept, with_payload)
-    if with_vectors:
-        kept = attach_vectors(spark, root, collection, kept, with_vectors)
-    return kept
+    return shape_page(spark, root, collection, kept, offset,
+                      with_payload=with_payload, with_vectors=with_vectors,
+                      meta=meta)
 
 
 def _resolve_typed_node(spark, root: str | None, collection: str | None,
@@ -1395,10 +1328,7 @@ def _nearest_mmr(spark: SparkSession, root: str, collection: str,
         strict=False)  # internal: query_points checked at its entry
     # (the composed must_not HasId self-exclusion would otherwise trip
     # the driving-filter check a declared config applies by default)
-    if offset:
-        out = (out.filter(F.col("rank") > offset)
-               .withColumn("rank", F.col("rank") - F.lit(int(offset))))
-    return out
+    return shape_page(spark, root, collection, out, offset)
 
 
 def query_batch_points(spark: SparkSession, root: str, collection: str,

@@ -191,11 +191,8 @@ def check_probe(root: str, collection: str, vector_name: str | None,
     ``search_allow_exact=True`` (Qdrant's knob of the same name)."""
     if sm.search_allow_exact:
         return
-    from .index import (  # noqa: PLC0415
-        index_is_fresh,
-        vector_index_meta,
-    )
-    from .upsert import collection_meta  # noqa: PLC0415
+    from .index import vector_index_meta  # noqa: PLC0415
+    from .upsert import collection_meta, collection_version  # noqa: PLC0415
 
     meta = collection_meta(root, collection) or {}
     vectors = meta.get("vectors", {})
@@ -205,7 +202,8 @@ def check_probe(root: str, collection: str, vector_name: str | None,
         vector_name = next(iter(vectors))
     imeta = vector_index_meta(root, collection, vector_name, tenant)
     if imeta is None or imeta.get("kind") not in QUANTIZED_KINDS \
-            or not index_is_fresh(root, collection, vector_name, tenant):
+            or int(imeta["built_version"]) \
+            != collection_version(root, collection):
         return
     if use_index is False:
         raise ValueError(

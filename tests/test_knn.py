@@ -413,3 +413,35 @@ def test_mmr_negative_cosine_clamps_at_zero(spark):
             for r in out.collect()}
     assert rows[1] == (10, 0.6)
     assert rows[2][0] == 11 and abs(rows[2][1] - 0.5) < 1e-9
+
+
+def test_unknown_use_index_and_vectorized_values_raise(spark, tmp_path):
+    """A typo in use_index is refused on the unfiltered AND the filtered
+    path (it used to mean the exact scan on one and 'auto' on the
+    other), and vectorized takes only 'auto', 'always' or False."""
+    import pytest
+
+    from bob_vector_db_spark.operators import upsert
+    from bob_vector_db_spark.operators.filters import Filter, MatchValue
+    from bob_vector_db_spark.operators.query_api import search_points
+
+    root = str(tmp_path / "store")
+    pts = spark.createDataFrame(
+        [(i, f"c{i % 3}", [float(i % 4), 1.0, float(i % 5)])
+         for i in range(20)],
+        "id long, cat string, emb array<double>")
+    upsert.create_collection(
+        spark, root, "c", df=pts, id_col="id", n_buckets=2,
+        vector_config={"emb": {"size": 3, "distance": "cosine"}})
+    q = pts.filter(F.col("id") < 2).select(
+        F.col("id").alias("qid"), F.col("emb").alias("qvec"))
+    flt = Filter(must=[MatchValue("cat", "c1")])
+    with pytest.raises(ValueError, match="got 'alwyas'"):
+        knn.search_collection(spark, root, "c", q, k=3, use_index="alwyas")
+    with pytest.raises(ValueError, match="got 'alwyas'"):
+        search_points(spark, root, "c", q, k=3, use_index="alwyas")
+    with pytest.raises(ValueError, match="got 'alwyas'"):
+        search_points(spark, root, "c", q, flt=flt, k=3,
+                      use_index="alwyas")
+    with pytest.raises(ValueError, match="vectorized must be"):
+        knn.search_collection(spark, root, "c", q, k=3, vectorized="yes")

@@ -1,0 +1,90 @@
+"""Search-layer job ledger: the Spark jobs each vector-search route submits.
+
+Each route runs on one tiny fixture under its own job group; the jobs are
+counted through ``statusTracker`` (the way ``perfbench/pbench/layers.py``
+counts them) and compared with the committed table below.  Job counts are
+exact per plan shape, so a refactor that keeps the plans keeps the table,
+and a rise fails here before it shows up as benchmark noise.  A change that
+lowers a count updates the table in the same commit.
+"""
+
+from __future__ import annotations
+
+import pytest
+from bob_vector_db_spark.operators import index, knn, upsert
+from bob_vector_db_spark.operators.filters import Filter, MatchAny
+from bob_vector_db_spark.operators.payload_index import build_payload_index
+from bob_vector_db_spark.operators.query_api import query_points, search_points
+
+# route -> Spark jobs for the call plus one collect of its result
+LEDGER = {
+    "ann_ivf": 6,
+    "exact_dense": 4,
+    "exact_multivector": 4,
+    "filtered_payload_exact": 12,
+    "filtered_composed": 11,
+    "query_points_by_id": 11,
+}
+
+
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("ledger") / "store")
+    dense = spark.createDataFrame(
+        [(i, f"cat{i % 5}", [float((i * 3 + j) % 7) + 0.5 for j in range(6)])
+         for i in range(80)],
+        "id long, category string, embedding array<double>")
+    upsert.create_collection(
+        spark, root, "d", df=dense, id_col="id", n_buckets=4,
+        vector_config={"embedding": {"size": 6, "distance": "cosine"}})
+    build_payload_index(spark, root, "d", "category", n_val_buckets=4)
+    index.build_vector_index(spark, root, "d", kind="ivf", n_lists=4,
+                             iters=3)
+    mv = spark.createDataFrame(
+        [(i, [[float((i + j * 3 + d) % 5) for d in range(4)]
+              for j in range(3)]) for i in range(40)],
+        "id long, colbert array<array<double>>")
+    upsert.create_collection(
+        spark, root, "m", df=mv, id_col="id", n_buckets=4,
+        vector_config={"colbert": {"size": 4, "distance": "dot",
+                                   "multivector": "max_sim"}})
+    return root
+
+
+def _jobs(spark, group: str, call) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        call().collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_search_routes_job_ledger(spark, store):
+    root = store
+    q = spark.createDataFrame([(0, [1.0, 2.0, 3.0, 1.0, 0.5, 2.0])],
+                              "qid long, qvec array<double>")
+    mq = spark.createDataFrame(
+        [(0, [[1.0, 0.0, 2.0, 1.0], [0.0, 1.0, 1.0, 3.0]])],
+        "qid long, qvecs array<array<double>>")
+    flt = Filter(must=[MatchAny("category", ["cat1", "cat3"])])
+    routes = {
+        "ann_ivf": lambda: knn.search_collection(
+            spark, root, "d", q, k=5, use_index="always", n_probe=2),
+        "exact_dense": lambda: knn.search_collection(
+            spark, root, "d", q, k=5, use_index=False),
+        "exact_multivector": lambda: knn.search_collection(
+            spark, root, "m", mq, k=5, query_vec="qvecs"),
+        "filtered_payload_exact": lambda: search_points(
+            spark, root, "d", q, flt=flt, k=5),
+        "filtered_composed": lambda: search_points(
+            spark, root, "d", q, flt=flt, k=5, use_index="always",
+            n_probe=2),
+        "query_points_by_id": lambda: query_points(
+            spark, root, "d", query=3, k=5),
+    }
+    got = {name: _jobs(spark, f"ledger:{name}", call)
+           for name, call in routes.items()}
+    assert got == LEDGER
