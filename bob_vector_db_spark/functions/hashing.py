@@ -74,3 +74,66 @@ def content_id(*cols: Column) -> Column:
     the oracle-tested path; F.uuid() stays available for production ingest.
     """
     return F.sha2(F.concat_ws("\x1f", *cols), 256)
+
+
+# XXH64 (the algorithm behind Spark's ``xxhash64``), ported so the driver
+# can compute the same hash buckets the store and the payload index were
+# partitioned by without submitting a Spark job.  Spark hashes a string as
+# its UTF-8 bytes with seed 42 and returns the 64-bit result as a signed
+# long; :func:`spark_bucket` adds the ``pmod(·, n)`` every layout uses.
+_P1 = 11400714785074694791
+_P2 = 14029467366897019727
+_P3 = 1609587929392839161
+_P4 = 9650029242287828579
+_P5 = 2870177450012600261
+_M64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def xxhash64(s: str, seed: int = 42) -> int:
+    """``F.xxhash64(F.lit(s))`` computed on the driver (signed 64-bit)."""
+    b = s.encode("utf-8")
+    n, i = len(b), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed & _M64,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                v[j] = _round(v[j], int.from_bytes(b[i:i + 8], "little"))
+                i += 8
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for lane in v:
+            h = ((h ^ _round(0, lane)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _round(0, int.from_bytes(b[i:i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(b[i:i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        h ^= b[i] * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+        i += 1
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def spark_bucket(s: str, n: int) -> int:
+    """``pmod(xxhash64(s), n)`` — the bucket of ``s`` in an ``n``-bucket
+    hash layout (store id buckets, payload value buckets)."""
+    return xxhash64(s) % n

@@ -935,23 +935,41 @@ def filter_match_ids(spark, root: str, collection: str, flt,
     predicate scan — the right plan for non-selective filters anyway; a
     stale index is usable only under ``allow_stale``).
     """
+    return _match_ids(spark, root, collection, flt, allow_stale)
+
+
+def _match_ids(spark, root: str, collection: str, flt,
+               allow_stale: bool = False, meta: dict | None = None,
+               driver: bool = False):
+    """:func:`filter_match_ids` with the collection ``meta`` the caller
+    already read.  ``driver=True`` first tries to answer every probed
+    leaf on the driver — keyword-index MatchValue/MatchAny/MatchContains
+    leaves through ``payload_index._keyword_id_list``, HasId leaves by
+    their literal ids — and then returns the intersected ids as a sorted
+    Python list of strings instead of a frame.  When any probed leaf
+    can't (another index kind, a literal only Spark renders exactly, or
+    more than ``payload_index.DRIVER_PROBE_CAP`` posting rows), the
+    whole filter resolves through the Spark frames as
+    :func:`filter_match_ids` does."""
     from ..functions.text import tokenize_text_py  # noqa: PLC0415
     from .payload_index import (  # noqa: PLC0415
         TEXT_FORMAT,
         _band_ok,
+        _payload_probe,
         geo_match_ids,
         nested_match_ids,
         payload_index_meta,
-        payload_match_ids,
         payload_range_match_ids,
         phrase_match_ids,
         prefix_band,
         text_match_ids,
     )
-    from .upsert import collection_version  # noqa: PLC0415
+    from .upsert import _version_of, collection_meta  # noqa: PLC0415
 
     flt = as_filter(flt)
-    cur = collection_version(root, collection)
+    if meta is None:
+        meta = collection_meta(root, collection)
+    cur = _version_of(root, collection, meta)
 
     meta_cache: dict = {}
     leaf_cache: dict = {}
@@ -1062,6 +1080,35 @@ def filter_match_ids(spark, root: str, collection: str, flt,
               if usable(key, kind, payload)]
     if not probes:
         return None, flt
+    residual = flt.residual_without(
+        {k for k, _, kind in probes if kind == "scalar"},
+        {k for k, _, kind in probes if kind == "contains"},
+        {k for k, _, kind in probes if kind == "range"},
+        tuple(p for _, p, kind in probes if kind == "nested"),
+        tuple(p for _, p, kind in probes if kind == "hasid"),
+        # per-LEAF drops (structural equality): two text leaves on the
+        # same key may differ in index-resolvability (tokenizer
+        # mismatch, out-of-band tokens) — a key-level drop would
+        # silently erase the unanswered one
+        tuple(p for _, p, kind in probes
+              if kind in ("text", "phrase", "text_prefix")))
+    if driver:
+        got_ids: set | None = None
+        for key, payload, kind in probes:
+            if kind == "hasid":
+                leaf = {str(v) for v in payload.ids}
+            elif kind in ("scalar", "contains"):
+                leaf = _payload_probe(
+                    spark, root, collection, key, list(payload),
+                    allow_stale, imeta=meta_cache[key], cur=cur,
+                    driver=True)
+                if leaf is None:
+                    break
+            else:
+                break
+            got_ids = set(leaf) if got_ids is None else got_ids & set(leaf)
+        else:
+            return sorted(got_ids), residual
     ids = None
     for key, payload, kind in probes:
         if kind == "range":
@@ -1102,19 +1149,9 @@ def filter_match_ids(spark, root: str, collection: str, flt,
                 # regardless, so correctness is unchanged)
                 continue
         else:
-            got = payload_match_ids(spark, root, collection, key,
-                                    list(payload),
-                                    allow_stale=allow_stale).select("id")
+            got = _payload_probe(spark, root, collection, key,
+                                 list(payload), allow_stale,
+                                 imeta=meta_cache[key],
+                                 cur=cur).select("id")
         ids = got if ids is None else ids.join(got, "id", "left_semi")
-    return ids, flt.residual_without(
-        {k for k, _, kind in probes if kind == "scalar"},
-        {k for k, _, kind in probes if kind == "contains"},
-        {k for k, _, kind in probes if kind == "range"},
-        tuple(p for _, p, kind in probes if kind == "nested"),
-        tuple(p for _, p, kind in probes if kind == "hasid"),
-        # per-LEAF drops (structural equality): two text leaves on the
-        # same key may differ in index-resolvability (tokenizer
-        # mismatch, out-of-band tokens) — a key-level drop would
-        # silently erase the unanswered one
-        tuple(p for _, p, kind in probes
-              if kind in ("text", "phrase", "text_prefix")))
+    return ids, residual

@@ -64,7 +64,7 @@ from pyspark.sql import types as T
 
 from ..functions import vector
 from . import quantize
-from .knn import resolve_metric
+from .knn import Route, resolve_metric
 from .localframe import local_frame
 from .upsert import (
     atomic_replace_dir,  # noqa: F401  (re-export: text_search imports it here)
@@ -970,6 +970,33 @@ def search_indexed(spark: SparkSession, root: str, collection: str,
             f"{version}; refresh_vector_index "
             f"absorbs the mutations incrementally (or rebuild, or search "
             f"with use_index='auto' to fall back to the exact scan)")
+    route = Route(vector_name, meta.get("vectors", {}).get(vector_name, {}),
+                  imeta["metric"], imeta, True)
+    return _search_route(
+        spark, root, collection, queries, route, k=k, n_probe=n_probe,
+        query_id=query_id, query_vec=query_vec,
+        exclude_self=exclude_self, round_to=round_to,
+        rerank_factor=rerank_factor, max_queries=max_queries,
+        tenant=tenant, candidate_ids=candidate_ids, rescore=rescore,
+        oversampling=oversampling, probe_per_token=probe_per_token)
+
+
+def _search_route(spark: SparkSession, root: str, collection: str,
+                  queries: DataFrame, route: Route, *,
+                  k: int, n_probe: int | None, query_id: str,
+                  query_vec: str, exclude_self: bool,
+                  round_to: int | None, rerank_factor: int,
+                  max_queries: int = 100_000,
+                  tenant: str | None = None,
+                  candidate_ids: DataFrame | None = None,
+                  rescore: bool = True,
+                  oversampling: float | None = None,
+                  probe_per_token: bool = False) -> DataFrame:
+    """:func:`search_indexed` of a resolved route: ``route.imeta`` is the
+    index meta ``knn.resolve_route`` read and checked (present, of a
+    usable kind, fresh, built for the metric), so the search opens no
+    sidecar JSON again."""
+    vector_name, imeta = route.vector_name, route.imeta
     kind, metric, id_col = imeta["kind"], imeta["metric"], imeta["id_col"]
     if oversampling is not None and float(oversampling) < 1.0:
         raise ValueError(

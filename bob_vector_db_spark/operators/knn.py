@@ -215,14 +215,14 @@ def resolve_route(root: str, collection: str, vector_name: str | None, *,
     if use_index is False:
         return Route(vector_name, cfg, metric, None, False)
     from .index import MV_KINDS, vector_index_meta  # noqa: PLC0415
-    from .upsert import collection_version  # noqa: PLC0415
+    from .upsert import _version_of  # noqa: PLC0415
 
     imeta = vector_index_meta(root, collection, vector_name, tenant)
     if imeta is None:
         why = "absent"
     elif multivector is not None and imeta["kind"] not in MV_KINDS:
         why = f"kind {imeta['kind']!r} (need one of {MV_KINDS})"
-    elif int(imeta["built_version"]) != collection_version(root, collection):
+    elif int(imeta["built_version"]) != _version_of(root, collection, meta):
         why = "stale"
     elif imeta["metric"] != metric:
         why = f"built for metric {imeta['metric']!r}"
@@ -357,15 +357,14 @@ def _run_route(spark: SparkSession, root: str, collection: str,
                rescore: bool = True, oversampling: float | None = None,
                probe_per_token: bool = False) -> DataFrame:
     """Run a resolved unfiltered route: probe ``route.imeta`` or scan."""
-    from .index import search_indexed  # noqa: PLC0415
+    from .index import _search_route  # noqa: PLC0415
     from .upsert import read_collection  # noqa: PLC0415
 
     if route.imeta is not None:
-        return search_indexed(
-            spark, root, collection, queries, k=k,
-            vector_name=route.vector_name, n_probe=n_probe,
+        return _search_route(
+            spark, root, collection, queries, route, k=k, n_probe=n_probe,
             query_id=query_id, query_vec=query_vec,
-            exclude_self=exclude_self, tenant=tenant,
+            exclude_self=exclude_self, round_to=6, tenant=tenant,
             rerank_factor=rerank_factor, rescore=rescore,
             oversampling=oversampling, probe_per_token=probe_per_token)
     if probe_per_token:

@@ -15,7 +15,10 @@ ids; a filtered search then fetches exactly those points from the
 collection — whose candidate id set prunes the id-hash buckets the same way
 — and scores them.  Two pruned probes, zero full scans: the selective-filter
 fast path a 100 TB filtered search needs (the main store's pushed-predicate
-scan remains the non-selective fallback).
+scan remains the non-selective fallback).  A keyword probe small enough
+(:data:`DRIVER_PROBE_CAP`) runs on the driver: the literals render and hash
+in Python (``functions.hashing.xxhash64`` is Spark's hash) and the probed
+bucket files and masks are read with pyarrow (:func:`_keyword_id_list`).
 
 Maintenance: the same delta-log / generation / mask LSM scheme as every
 other index artifact (operators.index) — mutations append, refresh is
@@ -31,6 +34,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import spark_bucket
 from ..functions.text import tokenize_text_py
 
 from .index import (
@@ -728,18 +732,35 @@ def payload_match_ids(spark: SparkSession, root: str, collection: str,
     """Ids whose ``column`` equals any of ``values``, resolved from the
     stored index: static ``val_bucket IN (...)`` partition filter + pushed
     ``val IN (...)`` predicate — only the probed value buckets are read."""
-    imeta = payload_index_meta(root, collection, column)
+    return _payload_probe(spark, root, collection, column, values,
+                          allow_stale)
+
+
+def _payload_probe(spark: SparkSession, root: str, collection: str,
+                   column: str, values: list, allow_stale: bool,
+                   imeta: dict | None = None, cur: int | None = None,
+                   driver: bool = False):
+    """:func:`payload_match_ids` with the sidecars the caller already
+    read (``imeta``, the data version ``cur``).  ``driver=True`` answers
+    a keyword index on the driver instead (:func:`_keyword_id_list`):
+    the matching ids as a list, or None when the probe must stay a Spark
+    plan — a range index, a literal only Spark can render, or too many
+    posting rows.  The refusals are the same either way."""
+    if imeta is None:
+        imeta = payload_index_meta(root, collection, column)
     if imeta is None:
         raise ValueError(
             f"no persisted payload index for {collection!r}/{column!r}; "
             f"run build_payload_index first")
-    if not allow_stale and int(imeta["built_version"]) != \
-            collection_version(root, collection):
-        raise ValueError(
-            f"payload index for {collection!r}/{column!r} was built at data "
-            f"version {imeta['built_version']} but the collection is at "
-            f"{collection_version(root, collection)}; refresh_payload_index "
-            f"absorbs the mutations (or rebuild)")
+    if not allow_stale:
+        if cur is None:
+            cur = collection_version(root, collection)
+        if int(imeta["built_version"]) != cur:
+            raise ValueError(
+                f"payload index for {collection!r}/{column!r} was built at "
+                f"data version {imeta['built_version']} but the collection "
+                f"is at {cur}; refresh_payload_index absorbs the mutations "
+                f"(or rebuild)")
     if imeta.get("index_type", "keyword") == "nested":
         raise ValueError(
             f"payload index for {collection!r}/{column!r} is element-level "
@@ -754,37 +775,19 @@ def payload_match_ids(spark: SparkSession, root: str, collection: str,
             f"payload index for {collection!r}/{column!r} holds grid-CELL "
             f"postings (geo); probe it through a geo filter leaf / "
             f"geo_match_ids — whole-value equality needs a keyword index")
+    ipath = index_path(root, collection, _payload_index_name(column))
     if imeta.get("index_type", "keyword") == "range":
+        if driver:
+            return None
         # a RANGE index answers equality too (the Qdrant typed-index
         # model): each literal maps to its boundary bucket via the num
         # image, the predicate compares TYPED values
         return _range_probe(spark, root, collection, column, imeta,
                             [("eq", v) for v in values], eq_values=values)
-    # stringify through SPARK's cast, not Python str(): the index stored
-    # cast-to-string values ('true', not 'True'; '2.0', not '2' for a
-    # double column).  Literals first cast to the column's STORED type
-    # (persisted in the index meta) so a Python int probes a double column
-    # as '2.0', exactly the string the build wrote.  ONE 1-row job renders
-    # every probe literal the way the build did AND hashes it into its
-    # bucket.
-    n = imeta["n_val_buckets"]
-    ctype = imeta.get("column_type")
-    vals: list = []
-    buckets: list = []
-    if values:
-        cols = []
-        for i, v in enumerate(values):
-            lit = F.lit(v).cast(ctype) if ctype else F.lit(v)
-            s = lit.cast("string")
-            cols.append(s.alias(f"v{i}"))
-            cols.append(F.pmod(F.xxhash64(s), F.lit(n)).cast("int")
-                        .alias(f"b{i}"))
-        row = spark.range(1).select(*cols).first()
-        vals = sorted({row[f"v{i}"] for i in range(len(values))
-                       if row[f"v{i}"] is not None})
-        buckets = sorted({row[f"b{i}"] for i in range(len(values))
-                          if row[f"v{i}"] is not None})
-    ipath = index_path(root, collection, _payload_index_name(column))
+    if driver:
+        return _keyword_id_list(ipath, imeta, values)
+    vals, buckets = _probe_keys(spark, values, imeta.get("column_type"),
+                                imeta["n_val_buckets"])
     pdir = os.path.join(ipath, "postings")
     if not os.path.isdir(pdir):  # index built over an empty collection
         return spark.createDataFrame([], "id string, val string")
@@ -792,6 +795,144 @@ def payload_match_ids(spark: SparkSession, root: str, collection: str,
             .filter(F.col("val_bucket").isin(buckets))
             .filter(F.col("val").isin(vals)))
     return _apply_masks(spark, ipath, post, "id").select("id", "val")
+
+
+# A driver-side keyword probe reads at most this many posting rows (and
+# this many mask rows), counted from the parquet footers before any row
+# is read; past it the probe stays a Spark plan.  The ids it returns are
+# hashed on the driver at ~3 µs each.
+DRIVER_PROBE_CAP = 100_000
+
+# integral column types -> bit width: an int literal inside the range
+# casts to itself, so Spark renders it as str(int)
+_INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
+_SPARK_RENDER = object()
+
+
+def _driver_render(v, ctype: str | None):
+    """``cast(cast(v AS ctype) AS string)`` — the string the build
+    posted for ``v`` — computed in Python where it provably equals
+    Spark's: ``str`` on a string column, an in-range non-bool int on an
+    integral column, a bool on a boolean column, and NULL for None.
+    Every other case (doubles, floats, decimals, dates, timestamps,
+    out-of-range ints, which ANSI mode rejects, mixed types) returns
+    ``_SPARK_RENDER``: only Spark's own cast renders those exactly."""
+    if v is None:
+        return None
+    if ctype == "string" and isinstance(v, str):
+        try:
+            v.encode("utf-8")
+        except UnicodeEncodeError:  # lone surrogate: not a Spark string
+            return _SPARK_RENDER
+        return str(v)
+    if ctype == "boolean" and isinstance(v, bool):
+        return "true" if v else "false"
+    bits = _INT_BITS.get(ctype)
+    if bits and isinstance(v, int) and not isinstance(v, bool) \
+            and -(1 << (bits - 1)) <= v < (1 << (bits - 1)):
+        return str(int(v))
+    return _SPARK_RENDER
+
+
+def _driver_keys(values: list, ctype: str | None,
+                 n: int) -> tuple[list, list] | None:
+    """(sorted distinct rendered literals, their sorted value buckets)
+    computed on the driver, or None when a literal needs Spark's
+    render."""
+    from ..functions.hashing import spark_bucket  # noqa: PLC0415
+
+    rendered = [_driver_render(v, ctype) for v in values]
+    if any(r is _SPARK_RENDER for r in rendered):
+        return None
+    vals = sorted({r for r in rendered if r is not None})
+    return vals, sorted({spark_bucket(v, n) for v in vals})
+
+
+def _probe_keys(spark: SparkSession, values: list, ctype: str | None,
+                n: int) -> tuple[list, list]:
+    """The probe literals rendered the way the build rendered them, and
+    their value buckets.  Stringify through SPARK's cast, not Python
+    str(): the index stored cast-to-string values ('true', not 'True';
+    '2.0', not '2' for a double column), and literals first cast to the
+    column's STORED type (persisted in the index meta) so a Python int
+    probes a double column as '2.0'.  The driver renders the cases where
+    Python provably agrees (:func:`_driver_render`); otherwise ONE 1-row
+    job renders and hashes every literal."""
+    keys = _driver_keys(values, ctype, n)
+    if keys is not None:
+        return keys
+    cols = []
+    for i, v in enumerate(values):
+        lit = F.lit(v).cast(ctype) if ctype else F.lit(v)
+        s = lit.cast("string")
+        cols.append(s.alias(f"v{i}"))
+        cols.append(F.pmod(F.xxhash64(s), F.lit(n)).cast("int")
+                    .alias(f"b{i}"))
+    row = spark.range(1).select(*cols).first()
+    vals = sorted({row[f"v{i}"] for i in range(len(values))
+                   if row[f"v{i}"] is not None})
+    buckets = sorted({row[f"b{i}"] for i in range(len(values))
+                      if row[f"v{i}"] is not None})
+    return vals, buckets
+
+
+def _data_files(d: str) -> list[str]:
+    """The data files of one directory as Spark lists them: names that
+    start with ``_`` or ``.`` (``_SUCCESS``, checksums) are skipped."""
+    if not os.path.isdir(d):
+        return []
+    return [os.path.join(d, f) for f in sorted(os.listdir(d))
+            if not f.startswith(("_", "."))
+            and os.path.isfile(os.path.join(d, f))]
+
+
+def _footer_rows(files: list[str]) -> int:
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    return sum(pq.read_metadata(f).num_rows for f in files)
+
+
+def _keyword_id_list(ipath: str, imeta: dict,
+                     values: list) -> list[str] | None:
+    """The ids a keyword-index probe matches, read with pyarrow on the
+    driver: the rendered literals' ``val_bucket=b`` posting files, the
+    pushed ``val IN`` predicate, then the masks under
+    :func:`index._apply_masks`'s rule (a row survives unless its id has
+    a mask with ``gen <= max(upto_gen)``).  Sorted distinct string ids,
+    or None when the probe must stay a Spark plan: a literal only Spark
+    renders exactly, or more than :data:`DRIVER_PROBE_CAP` posting or
+    mask rows."""
+    import pyarrow.dataset as ds  # noqa: PLC0415
+
+    keys = _driver_keys(values, imeta.get("column_type"),
+                        imeta["n_val_buckets"])
+    if keys is None:
+        return None
+    vals, buckets = keys
+    pdir = os.path.join(ipath, "postings")
+    files = [f for b in buckets
+             for f in _data_files(os.path.join(pdir, f"val_bucket={b}"))]
+    mfiles = _data_files(os.path.join(ipath, "masks"))
+    if _footer_rows(files) > DRIVER_PROBE_CAP \
+            or _footer_rows(mfiles) > DRIVER_PROBE_CAP:
+        return None
+    if not vals or not files:
+        return []
+    post = ds.dataset(files, format="parquet").to_table(
+        columns=["id", "gen"], filter=ds.field("val").isin(vals))
+    rows = [(i, g) for i, g in zip(post.column("id").to_pylist(),
+                                   post.column("gen").to_pylist())
+            if i is not None]
+    masked: dict = {}
+    if mfiles and rows:
+        m = ds.dataset(mfiles, format="parquet").to_table(
+            columns=["id", "upto_gen"],
+            filter=ds.field("id").isin(sorted({i for i, _ in rows})))
+        for i, g in zip(m.column("id").to_pylist(),
+                        m.column("upto_gen").to_pylist()):
+            if g is not None:
+                masked[i] = max(g, masked.get(i, g))
+    return sorted({i for i, g in rows if i not in masked or g > masked[i]})
 
 
 def _text_index_meta_checked(root: str, collection: str, column: str,
@@ -840,10 +981,7 @@ def _pruned_token_postings(spark: SparkSession, root: str, collection: str,
         return None
     n = imeta["n_val_buckets"]
     uniq = sorted(set(toks))
-    row = spark.range(1).select(
-        *[F.pmod(F.xxhash64(F.lit(t)), F.lit(n)).cast("int")
-          .alias(f"b{i}") for i, t in enumerate(uniq)]).first()
-    buckets = sorted({row[f"b{i}"] for i in range(len(uniq))})
+    buckets = sorted({spark_bucket(t, n) for t in uniq})
     post = (spark.read.parquet(pdir)
             .filter(F.col("val_bucket").isin(buckets))
             .filter(F.col("val").isin(uniq)))
@@ -867,10 +1005,7 @@ def _prefix_match_ids(spark: SparkSession, root: str, collection: str,
     n = imeta["n_val_buckets"]
     lo = prefix_band(imeta)["min_token_len"]
     uniq = sorted(set(toks))
-    row = spark.range(1).select(
-        *[F.pmod(F.xxhash64(F.lit(t[:lo])), F.lit(n)).cast("int")
-          .alias(f"b{i}") for i, t in enumerate(uniq)]).first()
-    buckets = sorted({row[f"b{i}"] for i in range(len(uniq))})
+    buckets = sorted({spark_bucket(t[:lo], n) for t in uniq})
     anymatch = None
     for t in uniq:
         c = F.col("val").startswith(t)
@@ -1367,47 +1502,63 @@ def filtered_search_indexed(spark: SparkSession, root: str, collection: str,
                             max_candidates: int = 1_000_000) -> DataFrame:
     """Filtered kNN through the payload index: resolve the filter to its id
     set FIRST (pruned value-bucket probe), fetch exactly those points from
-    the collection via a static id-bucket filter + AQE-chosen semi-join,
-    and score only them with the collection's declared metric.  This is the
-    Qdrant selective-filter plan; for non-selective filters prefer
-    ``knn.search_collection`` with a pushed predicate (scanning beats
-    fetching when most points match).  ``max_candidates`` is a loud
-    selectivity bound (checked via a distributed count — candidate ids
-    never materialize on the driver)."""
+    the collection via a static id-bucket filter, and score only them with
+    the collection's declared metric.  This is the Qdrant selective-filter
+    plan; for non-selective filters prefer ``knn.search_collection`` with a
+    pushed predicate (scanning beats fetching when most points match).
+
+    A keyword index with at most :data:`DRIVER_PROBE_CAP` posting rows in
+    the probed buckets resolves on the driver: the candidate ids come
+    back as a list, so ``max_candidates`` checks its length and the fetch
+    filters on the ids as literals — no job runs before the scoring
+    action.  Otherwise the probe stays a Spark plan: the selectivity
+    guard is a distributed count and the id-bucket set a <= n_buckets-row
+    distinct aggregate, so those candidate ids never reach the
+    driver."""
     from .knn import _resolve_search_space, knn_join  # noqa: PLC0415
+    from .upsert import _version_of, read_rows_for_id_list  # noqa: PLC0415
 
     meta, id_col, vector_name, metric = _resolve_search_space(
         root, collection, vector_name)
-
-    cand = payload_match_ids(spark, root, collection, column, values)
-    # both driver interactions stay O(small): the selectivity guard is a
-    # count aggregate over the (already bucket-pruned) posting probe, and
-    # the id-bucket set is a <= n_buckets-row distinct aggregate computed
-    # ON the distributed cand frame — candidate ids themselves never
-    # round-trip through the driver.
-    n_cand = cand.count()
+    imeta = payload_index_meta(root, collection, column)
+    cur = _version_of(root, collection, meta)
+    ids = _payload_probe(spark, root, collection, column, values, False,
+                         imeta=imeta, cur=cur, driver=True)
+    if ids is not None:
+        n_cand = len(ids)
+    else:
+        cand = _payload_probe(spark, root, collection, column, values,
+                              False, imeta=imeta, cur=cur)
+        n_cand = cand.count()
     if n_cand > max_candidates:
         raise ValueError(
             f"filter matches {n_cand} > {max_candidates} points — not a "
             f"selective filter; use search_collection with a pushed "
             f"predicate instead")
-    n_buckets = int(meta.get("n_buckets", 16))
-    id_buckets = sorted(
-        r[0] for r in cand
-        .select(F.pmod(F.xxhash64("id"), F.lit(n_buckets)).cast("int")
-                .alias("b")).distinct().collect()) if n_cand else []
-    path = collection_path(root, collection)
-    # no broadcast hint: AQE broadcasts a selective id set on its own and
-    # degrades to a shuffle join near the max_candidates guard instead of
-    # forcing a 1M-row broadcast (the same policy as every other
-    # candidate semi-join in this repo)
-    fetched = (
-        spark.read.parquet(path)
-        .filter(F.col(BUCKET_COL).isin(id_buckets))
-        .join(cand.select("id").withColumnRenamed("id", "_f_id"),
-              F.col(id_col).cast("string") == F.col("_f_id"), "left_semi")
-        .select(id_col, vector_name)
-    )
+    if ids is not None:
+        fetched = read_rows_for_id_list(spark, root, collection, ids,
+                                        meta=meta)
+        if fetched is None:
+            fetched = read_collection(spark, root, collection).limit(0)
+        fetched = fetched.select(id_col, vector_name)
+    else:
+        n_buckets = int(meta.get("n_buckets", 16))
+        id_buckets = sorted(
+            r[0] for r in cand
+            .select(F.pmod(F.xxhash64("id"), F.lit(n_buckets)).cast("int")
+                    .alias("b")).distinct().collect()) if n_cand else []
+        # no broadcast hint: AQE broadcasts a selective id set on its own
+        # and degrades to a shuffle join near the max_candidates guard
+        # instead of forcing a 1M-row broadcast (the same policy as every
+        # other candidate semi-join in this repo)
+        fetched = (
+            spark.read.parquet(collection_path(root, collection))
+            .filter(F.col(BUCKET_COL).isin(id_buckets))
+            .join(cand.select("id").withColumnRenamed("id", "_f_id"),
+                  F.col(id_col).cast("string") == F.col("_f_id"),
+                  "left_semi")
+            .select(id_col, vector_name)
+        )
     return knn_join(queries, fetched, k=k, query_id=query_id,
                     query_vec=query_vec, corpus_id=id_col,
                     corpus_vec=vector_name, exclude_self=False,

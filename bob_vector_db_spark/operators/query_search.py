@@ -11,9 +11,16 @@ built at qdrant_embedder.py:119-128): every entry point takes ONE
 - **selective path** — top-level must MatchValue/MatchAny leaves over
   columns with a FRESH payload index resolve to pruned posting probes;
   the candidate ids fetch their rows through the store's static
-  id-bucket filter (``upsert.read_rows_for_ids`` — O(|candidates|),
-  never a collection scan) and only the residual conditions evaluate on
-  the fetched rows;
+  id-bucket filter (O(|candidates|), never a collection scan) and only
+  the residual conditions evaluate on the fetched rows.  The searches,
+  scrolls and facets here resolve the filter through
+  ``filters._match_ids(driver=True)``: keyword-index leaves whose probed
+  buckets hold at most ``payload_index.DRIVER_PROBE_CAP`` posting rows
+  are read with pyarrow on the driver, so the candidate ids arrive as a
+  list, their count is free, and the fetch
+  (``upsert.read_rows_for_id_list``) filters on them as literals — no
+  Spark job runs before the final action.  Larger or other probes stay
+  Spark plans fetched through ``upsert.read_rows_for_ids``;
 - **scan path** — everything else compiles to one pushed SQL predicate
   (``Filter.to_sql`` → ``F.expr``), so Catalyst folds the leaf
   comparisons into the parquet scan.  Non-selective filters WANT this
@@ -38,6 +45,7 @@ from pyspark.sql import functions as F
 
 from .filters import (
     Filter,
+    _match_ids,
     as_filter,
     filter_match_ids,
     has_literal_id_leaves,
@@ -48,6 +56,7 @@ from .localframe import local_frame
 from .upsert import (
     collection_meta,
     read_collection,
+    read_rows_for_id_list,
     read_rows_for_ids,
 )
 
@@ -69,25 +78,42 @@ def _scope_tenant(root: str, collection: str, rows: DataFrame,
     return rows.filter(F.col(tcol) == str(tenant))
 
 
+def _fetch_ids(spark: SparkSession, root: str, collection: str, ids,
+               tenant: str | None = None,
+               meta: dict | None = None) -> DataFrame | None:
+    """Rows of the candidate ``ids`` through the store's static id-bucket
+    filter: a driver-side id list (``filters._match_ids(driver=True)``)
+    filters on the ids as literals, a Spark id frame probes its buckets
+    first (``read_rows_for_ids``)."""
+    if isinstance(ids, list):
+        return read_rows_for_id_list(spark, root, collection, ids,
+                                     tenant=tenant, meta=meta)
+    return read_rows_for_ids(spark, root, collection, ids, tenant=tenant)
+
+
 def _resolve_candidates(spark: SparkSession, root: str, collection: str,
                         flt, use_payload_index,
                         max_candidates: int,
-                        resolution: tuple | None = None
+                        resolution: tuple | None = None,
+                        meta: dict | None = None
                         ) -> tuple[DataFrame | None, Filter]:
     """Shared dispatch: (candidate rows | None, residual filter).  None
     means "use the pushed-predicate scan" — no usable index, the filter
     matched too many points for the fetch plan to win, or routing was
     disabled.  ``resolution`` is an optional precomputed
-    ``(ids, residual, n_cand)`` from an earlier ``filter_match_ids`` in
-    the same call (the composed-search dispatch) — reusing it avoids a
-    second posting probe + count when 'auto' declines the composition."""
+    ``(ids, residual, n_cand)`` from an earlier resolution in the same
+    call (the composed-search dispatch) — reusing it avoids a second
+    posting probe + count when 'auto' declines the composition.  The
+    filter resolves on the driver when it can (``filters._match_ids``),
+    and ``meta`` is the collection meta when the caller holds it."""
     flt = as_filter(flt)
     if use_payload_index is False:
         return None, flt
     if resolution is not None:
         ids, residual, n_pre = resolution
     else:
-        ids, residual = filter_match_ids(spark, root, collection, flt)
+        ids, residual = _match_ids(spark, root, collection, flt, meta=meta,
+                                   driver=True)
         n_pre = None
     if ids is None:
         if use_payload_index == "always":
@@ -96,30 +122,36 @@ def _resolve_candidates(spark: SparkSession, root: str, collection: str,
                 f"the filter has a fresh payload index on {collection!r}; "
                 f"build_payload_index the filtered column(s) or use 'auto'")
         return None, flt
-    n_cand = n_pre if n_pre is not None else ids.count()
+    n_cand = n_pre if n_pre is not None else (
+        len(ids) if isinstance(ids, list) else ids.count())
     if n_cand > max_candidates:
         if use_payload_index == "always":
             raise ValueError(
                 f"filter matches {n_cand} > {max_candidates} points — not "
                 f"selective; use the scan path (use_payload_index='auto')")
         return None, flt
-    rows = read_rows_for_ids(spark, root, collection, ids)
+    rows = _fetch_ids(spark, root, collection, ids, meta=meta)
     if rows is None:  # empty store / empty candidate set
         rows = read_collection(spark, root, collection).limit(0)
     return rows.filter(residual.to_column()), residual
 
 
 def _final_filter_ids(spark: SparkSession, root: str, collection: str,
-                      ids: DataFrame, residual: Filter, id_col: str,
-                      tenant: str | None = None) -> DataFrame:
+                      ids, residual: Filter, id_col: str,
+                      tenant: str | None = None,
+                      meta: dict | None = None) -> DataFrame:
     """The filter's FINAL candidate id frame: the payload-index id set
-    narrowed by the residual conditions evaluated on a bucket-pruned
-    fetch of those ids (a no-op when the index answered every leaf)."""
+    (a frame, or a driver-side id list) narrowed by the residual
+    conditions evaluated on a bucket-pruned fetch of those ids (a no-op
+    when the index answered every leaf)."""
     if residual == Filter():
-        return ids
-    rows = read_rows_for_ids(spark, root, collection, ids, tenant=tenant)
-    return (ids.limit(0) if rows is None
-            else rows.filter(residual.to_column()).select(id_col))
+        return (local_frame(spark, [(i,) for i in ids], "id string")
+                if isinstance(ids, list) else ids)
+    rows = _fetch_ids(spark, root, collection, ids, tenant=tenant, meta=meta)
+    if rows is None:
+        return (local_frame(spark, [], "id string")
+                if isinstance(ids, list) else ids.limit(0))
+    return rows.filter(residual.to_column()).select(id_col)
 
 
 def _filter_candidate_ids(spark: SparkSession, root: str, collection: str,
@@ -248,6 +280,7 @@ def _filtered_indexed_search(spark: SparkSession, root: str, collection: str,
                              id_col: str,
                              rescore: bool = True,
                              oversampling: float | None = None,
+                             meta: dict | None = None,
                              ) -> tuple[DataFrame | None, tuple | None]:
     """Compose the payload index with the route's fresh ANN artifact
     (``route.imeta``): filter → candidate ids (pruned posting probes),
@@ -263,8 +296,9 @@ def _filtered_indexed_search(spark: SparkSession, root: str, collection: str,
     cheaper AND exact) — then ``resolution`` carries the
     already-computed ``(ids, residual, n_cand)`` so the exact path
     doesn't re-probe the postings.  Raises under "always" when
-    composition can't run."""
-    from .index import search_indexed  # noqa: PLC0415
+    composition can't run.  ``meta`` is the collection meta the caller
+    read."""
+    from .index import _search_route  # noqa: PLC0415
 
     if use_payload_index is False:
         if route.always:
@@ -272,7 +306,8 @@ def _filtered_indexed_search(spark: SparkSession, root: str, collection: str,
                 "use_index='always' needs the payload-index candidate "
                 "path; use_payload_index=False disables it")
         return None, None
-    ids, residual = filter_match_ids(spark, root, collection, flt)
+    ids, residual = _match_ids(spark, root, collection, flt, meta=meta,
+                               driver=True)
     if ids is None:
         if route.always:
             raise ValueError(
@@ -280,24 +315,28 @@ def _filtered_indexed_search(spark: SparkSession, root: str, collection: str,
                 f"filter has a fresh payload index on {collection!r}; "
                 f"build_payload_index the filtered column(s)")
         return None, None
-    # the candidate id frame feeds THREE consumers (the selectivity
-    # count, the residual fetch's bucket probe, the final semi-join) —
-    # materialize the bounded posting-probe output ONCE through the
-    # capped driver roundtrip (the rescore-tail pattern; lazy fallback
-    # past the cap keeps the unbounded case two pruned passes instead
-    # of a multi-GB collect).  The probe's own val_bucket pruning is
-    # plan-asserted on the probe frame in tests/test_payload_index.py;
-    # it no longer appears in the composed plan because it already ran.
-    from .upsert import materialize_small  # noqa: PLC0415
+    if isinstance(ids, list):
+        n_cand = len(ids)  # resolved on the driver: the count is free
+    else:
+        # the candidate id frame feeds THREE consumers (the selectivity
+        # count, the residual fetch's bucket probe, the final semi-join)
+        # — materialize the bounded posting-probe output ONCE through the
+        # capped driver roundtrip (the rescore-tail pattern; lazy
+        # fallback past the cap keeps the unbounded case two pruned
+        # passes instead of a multi-GB collect).  The probe's own
+        # val_bucket pruning is plan-asserted on the probe frame in
+        # tests/test_payload_index.py; it no longer appears in the
+        # composed plan because it already ran.
+        from .upsert import materialize_small  # noqa: PLC0415
 
-    mat = materialize_small(spark, ids)
-    over_cap = mat is ids  # identity return = the lazy fallback fired
-    ids = mat
-    if not route.always:
+        mat = materialize_small(spark, ids)
+        over_cap = mat is ids  # identity return = the lazy fallback fired
+        ids = mat
         # past the materialize cap the candidate set is certainly above
         # the (much smaller) threshold — skip the count; downstream
         # consumers that need an exact n recount lazily
-        n_cand = None if over_cap else ids.count()
+        n_cand = None if over_cap or route.always else ids.count()
+    if not route.always:
         if n_cand is not None and n_cand <= index_candidate_threshold:
             # few candidates: the pruned exact fetch is the plan — hand
             # the resolution back so it isn't recomputed
@@ -311,14 +350,13 @@ def _filtered_indexed_search(spark: SparkSession, root: str, collection: str,
             # 'always' still composes as asked.
             return None, (ids, residual, n_cand)
     final_ids = _final_filter_ids(spark, root, collection, ids, residual,
-                                  id_col, tenant=tenant)
-    return search_indexed(spark, root, collection, queries, k=k,
-                          vector_name=route.vector_name, n_probe=n_probe,
-                          query_id=query_id, query_vec=query_vec,
-                          exclude_self=False, round_to=round_to,
-                          rerank_factor=rerank_factor,
-                          rescore=rescore, oversampling=oversampling,
-                          tenant=tenant, candidate_ids=final_ids), None
+                                  id_col, tenant=tenant, meta=meta)
+    return _search_route(spark, root, collection, queries, route, k=k,
+                         n_probe=n_probe, query_id=query_id,
+                         query_vec=query_vec, exclude_self=False,
+                         round_to=round_to, rerank_factor=rerank_factor,
+                         rescore=rescore, oversampling=oversampling,
+                         tenant=tenant, candidate_ids=final_ids), None
 
 
 def search_points(spark: SparkSession, root: str, collection: str,
@@ -393,9 +431,9 @@ def search_points(spark: SparkSession, root: str, collection: str,
                           use_index=use_index, rescore=rescore,
                           oversampling=oversampling, meta=meta)
     vector_name = route.vector_name
-    from .strict import resolve_strict_for  # noqa: PLC0415
+    from .strict import _strict_of  # noqa: PLC0415
 
-    _sm = resolve_strict_for(root, collection, strict)
+    _sm = _strict_of(meta, strict)
     if _sm is not None:
         from . import strict as strict_mod  # noqa: PLC0415
 
@@ -426,11 +464,11 @@ def search_points(spark: SparkSession, root: str, collection: str,
                 spark, root, collection, queries, flt, k + offset, route,
                 query_id, query_vec, round_to, use_payload_index, n_probe,
                 rerank_factor, index_candidate_threshold, tenant, id_col,
-                rescore=rescore, oversampling=oversampling)
+                rescore=rescore, oversampling=oversampling, meta=meta)
         if out is None:
             cand, _residual = _resolve_candidates(
                 spark, root, collection, flt, use_payload_index,
-                max_candidates, resolution=resolution)
+                max_candidates, resolution=resolution, meta=meta)
             if cand is None:
                 corpus = (read_collection(spark, root, collection,
                                           tenant=tenant)

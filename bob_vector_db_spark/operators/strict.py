@@ -85,12 +85,20 @@ def resolve_strict_for(root: str, collection: str,
     it here).  Explicit False disables even a declared config; explicit
     True / an instance overrides it; None (the default) applies the
     declared config when one exists."""
-    if strict is False:
-        return None
+    meta = None
     if strict is None:
         from .upsert import collection_meta  # noqa: PLC0415
 
-        cfg = (collection_meta(root, collection) or {}).get("strict_mode")
+        meta = collection_meta(root, collection)
+    return _strict_of(meta, strict)
+
+
+def _strict_of(meta: dict | None, strict) -> StrictMode | None:
+    """:func:`resolve_strict_for` over a collection meta already read."""
+    if strict is False:
+        return None
+    if strict is None:
+        cfg = (meta or {}).get("strict_mode")
         return StrictMode(**cfg) if cfg else None
     return resolve_strict(strict)
 

@@ -421,11 +421,16 @@ def collection_version(root: str, collection: str) -> int:
     publishes its delta BEFORE it bumps the meta, so a crash in between
     leaves the published delta as the version authority — the index can
     never look fresh across a mutation the log already announced."""
-    meta = collection_meta(root, collection)
+    return _version_of(root, collection, collection_meta(root, collection))
+
+
+def _version_of(root: str, collection: str, meta: dict | None) -> int:
+    """:func:`collection_version` from an already-read collection meta —
+    for callers that hold the meta and should not open the sidecar
+    again."""
     if meta is None:
         return 0
-    path = collection_path(root, collection)
-    published = _published_delta_versions(path)
+    published = _published_delta_versions(collection_path(root, collection))
     return max(int(meta.get("version", 0)), published[-1] if published else 0)
 
 
@@ -610,8 +615,12 @@ def read_rows_for_ids(spark: SparkSession, root: str, collection: str,
     """Collection rows whose id appears in ``ids_df`` (first column), read
     through a STATIC ``id_bucket IN (...)`` partition filter computed from
     the ids' hashes — the incremental-refresh fetch path: O(|ids| + their
-    buckets), never a full-collection scan.  None when nothing can match
-    (empty id set or empty store) — callers skip their append step.
+    buckets), never a full-collection scan.  The bucket set comes from a
+    Spark job over ``ids_df`` (a distinct collect of at most n_buckets
+    rows) before the caller's own action runs; ids already on the driver
+    fetch through :func:`read_rows_for_id_list` instead, which needs no
+    job.  None when nothing can match (empty id set or empty store) —
+    callers skip their append step.
 
     ``tenant`` adds the outer-level static tenant filter on a multitenant
     layout, so the fetch prunes BOTH partition levels (tenant subtree ∩
@@ -649,6 +658,46 @@ def read_rows_for_ids(spark: SparkSession, root: str, collection: str,
         return pruned
     return pruned.join(
         wanted, F.col(id_col).cast("string") == F.col("_m_id"), "left_semi")
+
+
+def read_rows_for_id_list(spark: SparkSession, root: str, collection: str,
+                          ids: list[str], tenant: str | None = None,
+                          meta: dict | None = None) -> DataFrame | None:
+    """Collection rows whose id is in ``ids``, a driver-side list of
+    string ids: the ids hash to their ``id_bucket`` set on the driver
+    (:func:`functions.hashing.spark_bucket`, the same bucket the store
+    wrote), which becomes a static partition filter, and the ids
+    themselves become one SQL ``IN`` list on the stringified id column.
+    Unlike :func:`read_rows_for_ids` this submits no job before the
+    caller's action.  ``meta`` is the collection meta when the caller
+    already holds it.  None when nothing can match (no ids, or an empty
+    store)."""
+    from ..functions.hashing import spark_bucket  # noqa: PLC0415
+
+    if meta is None:
+        meta = collection_meta(root, collection) or {}
+    id_col = meta.get("id_col", "id")
+    n_buckets = int(meta.get("n_buckets", DEFAULT_N_BUCKETS))
+    path = collection_path(root, collection)
+    touched = sorted({spark_bucket(i, n_buckets) for i in ids})
+    if not touched or not _store_exists(path):
+        return None
+    pruned = spark.read.parquet(path).filter(F.col(BUCKET_COL).isin(touched))
+    if tenant is not None:
+        tcol = meta.get("tenant_col")
+        if tcol is None:
+            raise ValueError(
+                f"collection {collection!r} has no tenant_col; tenant-"
+                f"scoped fetches need the multitenant layout")
+        pruned = pruned.filter(F.col(tcol) == str(tenant))
+    listed = ", ".join(_sql_string(i) for i in ids)
+    return pruned.drop(BUCKET_COL).filter(
+        F.expr(f"CAST(`{id_col}` AS STRING) IN ({listed})"))
+
+
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash-escaped quotes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def materialize_small(spark: SparkSession, df: DataFrame,

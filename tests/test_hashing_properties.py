@@ -100,3 +100,47 @@ def test_minhash_signature_matches_python_model(tokens):
         .first()
     )
     assert [got[f"m{i}"] for i in range(4)] == expect
+
+
+def _of_byte_length(n: int, alphabet: str) -> str:
+    """A string of exactly ``n`` UTF-8 bytes cycling through
+    ``alphabet`` (1- to 4-byte characters), topped up with ASCII."""
+    out, size = [], 0
+    for i in range(n):
+        ch = alphabet[i % len(alphabet)]
+        w = len(ch.encode("utf-8"))
+        if size + w > n:
+            break
+        out.append(ch)
+        size += w
+    return "".join(out) + "z" * (n - size)
+
+
+def test_xxhash64_port_matches_spark():
+    """The driver XXH64 (seed 42) equals ``F.xxhash64`` and
+    ``pmod(·, n)`` equals ``F.pmod`` — over UTF-8 byte lengths 0-100
+    (which cross the 4/8/32-byte stripe boundaries), non-BMP
+    characters and decimal id strings, in one batched query."""
+    from bob_vector_db_spark.functions.hashing import spark_bucket, xxhash64
+
+    strings = []
+    for n in range(101):
+        strings += [_of_byte_length(n, "a"), _of_byte_length(n, "aé€😀"),
+                    _of_byte_length(n, "😀\U0010fffd")]
+    strings += ["\U0001f600" * k for k in (1, 7, 8, 9, 16)]
+    strings += [str(i) for i in (0, 1, -1, 42, 9999, 10 ** 18,
+                                 -(2 ** 63), 2 ** 63 - 1)]
+    strings += [str(i * 7919) for i in range(60)]
+    strings = sorted(set(strings))
+    assert {len(s.encode("utf-8")) for s in strings} >= set(range(101))
+    buckets = (1, 4, 7, 16, 32, 1000)
+    spark = _get_spark()
+    df = spark.createDataFrame([(s,) for s in strings], "s string")
+    rows = df.select("s", F.xxhash64("s").alias("h"), *[
+        F.pmod(F.xxhash64("s"), F.lit(n)).alias(f"b{n}")
+        for n in buckets]).collect()
+    assert len(rows) == len(strings)
+    for r in rows:
+        assert xxhash64(r["s"]) == r["h"], r["s"]
+        for n in buckets:
+            assert spark_bucket(r["s"], n) == r[f"b{n}"], (r["s"], n)

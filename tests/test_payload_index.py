@@ -126,16 +126,26 @@ def test_probe_literal_coerces_to_indexed_column_type(spark, tmp_path):
     assert got == {"1", "3"}
 
 
-def test_filtered_search_never_collects_candidate_ids(spark, tmp_path,
-                                                      monkeypatch):
-    """Scale contract: filtered_search_indexed's driver interactions are a
-    count() selectivity guard and a <= n_buckets-row bucket-set aggregate —
-    the candidate id list itself must never round-trip through the
-    driver."""
+def test_filtered_search_driver_holds_at_most_the_cap(spark, tmp_path,
+                                                     monkeypatch):
+    """Scale contract: at or under ``DRIVER_PROBE_CAP`` posting rows the
+    candidate ids resolve on the driver, which then holds at most the
+    cap's worth of ids; past the cap the probe stays a Spark plan whose
+    driver interactions are a count and a <= n_buckets-row bucket-set
+    aggregate, so no collect exceeds n_buckets rows."""
+    from bob_vector_db_spark.operators import payload_index
+
     root, df = _mk(spark, tmp_path)          # 80 points, 4 id buckets
     build_payload_index(spark, root, "c", "category", n_val_buckets=8)
     q = spark.createDataFrame([(0, [1.0, 2.0, 3.0, 1.0, 0.5, 2.0])],
                               "qid long, qvec array<double>")
+    held: list[int] = []
+    real_list = payload_index._keyword_id_list
+
+    def recording(*args):
+        got = real_list(*args)
+        held.append(-1 if got is None else len(got))
+        return got
 
     # patch the CONCRETE DataFrame class (pyspark 4's classic subclass
     # overrides collect — patching the pyspark.sql.DataFrame base misses it)
@@ -148,15 +158,139 @@ def test_filtered_search_never_collects_candidate_ids(spark, tmp_path,
         collected_sizes.append(len(rows))
         return rows
 
+    monkeypatch.setattr(payload_index, "_keyword_id_list", recording)
     monkeypatch.setattr(cls, "collect", counting_collect)
     out = filtered_search_indexed(spark, root, "c", q, column="category",
                                   values=["cat1", "cat3"], k=50)
-    monkeypatch.undo()
-    # cat1+cat3 match 32 of 80 ids; any collect during planning must stay
-    # far below that (1-row literal render, <=4 bucket rows, 1 query row)
-    assert collected_sizes, "expected planning-time collects"
-    assert max(collected_sizes) <= 8, collected_sizes
+    # cat1+cat3 match 32 of 80 ids, all resolved on the driver
+    assert held == [32] and 32 <= payload_index.DRIVER_PROBE_CAP
+    assert collected_sizes == []
     assert out.count() == 32
+
+    held.clear()
+    monkeypatch.setattr(payload_index, "DRIVER_PROBE_CAP", 31)
+    out = filtered_search_indexed(spark, root, "c", q, column="category",
+                                  values=["cat1", "cat3"], k=50)
+    monkeypatch.undo()
+    assert held == [-1]  # over the cap: the Spark plan answered
+    assert collected_sizes, "expected planning-time collects"
+    assert max(collected_sizes) <= 4, collected_sizes
+    assert out.count() == 32
+
+
+def test_driver_render_equals_spark_cast(spark):
+    """The probe literal's driver render is Spark's
+    ``cast(cast(v AS ctype) AS string)`` for every supported (ctype,
+    value) — checked in one batched query — and every other case,
+    ANSI overflow included, is left to Spark's render."""
+    from bob_vector_db_spark.operators.payload_index import (
+        _SPARK_RENDER,
+        _driver_render,
+        _probe_keys,
+    )
+
+    supported = [
+        ("string", "cat1"), ("string", ""), ("string", "it's \\ ü 😀"),
+        ("string", "  padded "), ("string", None),
+        ("boolean", True), ("boolean", False),
+        ("tinyint", -128), ("tinyint", 127), ("smallint", -32768),
+        ("smallint", 32767), ("int", 0), ("int", -2147483648),
+        ("int", 2147483647), ("bigint", -(1 << 63)),
+        ("bigint", (1 << 63) - 1), ("bigint", 42), ("int", None),
+    ]
+    row = spark.range(1).select(*[
+        (F.lit(v).cast(c) if v is not None else F.lit(None).cast(c))
+        .cast("string").alias(f"c{i}")
+        for i, (c, v) in enumerate(supported)]).first()
+    for i, (c, v) in enumerate(supported):
+        assert _driver_render(v, c) == row[f"c{i}"], (c, v)
+
+    import datetime
+    import decimal
+
+    unsupported = [
+        ("double", 2), ("double", 2.0), ("float", 0.1),
+        ("decimal(10,2)", decimal.Decimal("1.5")),
+        ("date", datetime.date(2024, 1, 2)),
+        ("timestamp", datetime.datetime(2024, 1, 2, 3, 4)),
+        ("tinyint", 128), ("smallint", -32769), ("int", 1 << 31),
+        ("bigint", 1 << 63), ("int", True), ("boolean", 1),
+        ("int", "7"), ("string", 7), (None, "x"), ("string", "\ud800"),
+    ]
+    for c, v in unsupported:
+        assert _driver_render(v, c) is _SPARK_RENDER, (c, v)
+    # ... and the Spark render then runs: under ANSI an overflowing
+    # literal raises exactly as the pushed scan would
+    if spark.conf.get("spark.sql.ansi.enabled") == "true":
+        with pytest.raises(Exception, match="CAST_OVERFLOW|overflow"):
+            _probe_keys(spark, [128], "tinyint", 8)
+    assert _probe_keys(spark, [2], "double", 8)[0] == ["2.0"]
+
+
+def test_masked_index_answers_alike_on_driver_and_spark_paths(
+        spark, tmp_path, monkeypatch):
+    """Masks (left by an upsert + refresh) hide the same postings on the
+    driver read as in ``index._apply_masks``: the probe's ids and the
+    filtered search agree between the driver path and the Spark path
+    (forced by a cap below the posting count)."""
+    from bob_vector_db_spark.operators import payload_index, query_api
+    from bob_vector_db_spark.operators.filters import (
+        Filter,
+        MatchAny,
+        _match_ids,
+    )
+
+    root, _ = _mk(spark, tmp_path)
+    build_payload_index(spark, root, "c", "category", n_val_buckets=4)
+    upsert.upsert(spark, root, "c", spark.createDataFrame(
+        [(1, "cat3", [1.0] * 6), (3, "cat0", [0.5] * 6),
+         (8, "cat1", [0.5] * 6), (200, "cat1", [2.0] * 6)],
+        "id long, category string, embedding array<double>"))
+    upsert.delete_points(spark, root, "c", [6])
+    index.refresh_all_indexes(spark, root, "c")
+    ipath = index.index_path(root, "c", "category__payload")
+    assert index._mask_row_count(spark, ipath) > 0
+    flt = Filter(must=[MatchAny("category", ["cat1", "cat3"])])
+    q = spark.createDataFrame([(0, [1.0, 2.0, 3.0, 1.0, 0.5, 2.0])],
+                              "qid long, qvec array<double>")
+
+    def answer():
+        ids, _ = _match_ids(spark, root, "c", flt, driver=True)
+        out = query_api.search_points(spark, root, "c", q, flt=flt, k=40)
+        return ids, sorted(map(tuple, out.collect()))
+
+    driver_ids, driver_out = answer()
+    assert isinstance(driver_ids, list)
+    monkeypatch.setattr(payload_index, "DRIVER_PROBE_CAP", 1)
+    spark_ids, spark_out = answer()
+    monkeypatch.undo()
+    assert not isinstance(spark_ids, list)
+    want = sorted(r["id"] for r in upsert.read_collection(spark, root, "c")
+                  .filter(F.col("category").isin("cat1", "cat3"))
+                  .select(F.col("id").cast("string")).collect())
+    assert driver_ids == want
+    assert sorted(r["id"] for r in spark_ids.collect()) == want
+    assert driver_out == spark_out and len(driver_out) == len(want)
+
+
+def test_read_rows_for_id_list_quotes_ids(spark, tmp_path):
+    """The id-list fetch renders string ids as SQL literals: quotes,
+    backslashes and non-ASCII ids fetch exactly their rows, like the
+    frame-driven fetch."""
+    root = str(tmp_path / "store")
+    ids = ["a'b", "c\\d", "ü😀", "plain", "x\\'y", "ghost"]
+    df = spark.createDataFrame([(i, n) for n, i in enumerate(ids[:-1])],
+                               "id string, n int")
+    upsert.create_collection(spark, root, "s", df=df, id_col="id",
+                             n_buckets=4)
+    got = upsert.read_rows_for_id_list(spark, root, "s", ids[1:])
+    want = upsert.read_rows_for_ids(
+        spark, root, "s", spark.createDataFrame([(i,) for i in ids[1:]],
+                                                "id string"))
+    assert sorted(map(tuple, got.collect())) == \
+        sorted(map(tuple, want.collect())) == \
+        sorted((i, n) for n, i in enumerate(ids[:-1]) if n >= 1)
+    assert upsert.read_rows_for_id_list(spark, root, "s", []) is None
 
 
 def test_empty_collection_payload_index_probes_empty(spark, tmp_path):

@@ -10,6 +10,9 @@ lowers a count updates the table in the same commit.
 
 from __future__ import annotations
 
+import builtins
+import os
+
 import pytest
 from bob_vector_db_spark.operators import index, knn, upsert
 from bob_vector_db_spark.operators.filters import Filter, MatchAny
@@ -21,10 +24,13 @@ LEDGER = {
     "ann_ivf": 6,
     "exact_dense": 4,
     "exact_multivector": 4,
-    "filtered_payload_exact": 12,
-    "filtered_composed": 11,
+    "filtered_payload_exact": 4,
+    "filtered_payload_masked": 4,
+    "filtered_composed": 8,
     "query_points_by_id": 11,
 }
+
+FLT = Filter(must=[MatchAny("category", ["cat1", "cat3"])])
 
 
 @pytest.fixture(scope="module")
@@ -40,6 +46,18 @@ def store(spark, tmp_path_factory):
     build_payload_index(spark, root, "d", "category", n_val_buckets=4)
     index.build_vector_index(spark, root, "d", kind="ivf", n_lists=4,
                              iters=3)
+    # "dm": the same points with a payload index that has masks — one
+    # upsert moves ids between categories, and the refresh masks their
+    # old postings
+    upsert.create_collection(
+        spark, root, "dm", df=dense, id_col="id", n_buckets=4,
+        vector_config={"embedding": {"size": 6, "distance": "cosine"}})
+    build_payload_index(spark, root, "dm", "category", n_val_buckets=4)
+    upsert.upsert(spark, root, "dm", spark.createDataFrame(
+        [(1, "cat3", [1.0] * 6), (3, "cat0", [0.5] * 6),
+         (200, "cat1", [2.0] * 6)],
+        "id long, category string, embedding array<double>"))
+    index.refresh_all_indexes(spark, root, "dm")
     mv = spark.createDataFrame(
         [(i, [[float((i + j * 3 + d) % 5) for d in range(4)]
               for j in range(3)]) for i in range(40)],
@@ -69,7 +87,7 @@ def test_search_routes_job_ledger(spark, store):
     mq = spark.createDataFrame(
         [(0, [[1.0, 0.0, 2.0, 1.0], [0.0, 1.0, 1.0, 3.0]])],
         "qid long, qvecs array<array<double>>")
-    flt = Filter(must=[MatchAny("category", ["cat1", "cat3"])])
+    flt = FLT
     routes = {
         "ann_ivf": lambda: knn.search_collection(
             spark, root, "d", q, k=5, use_index="always", n_probe=2),
@@ -79,6 +97,8 @@ def test_search_routes_job_ledger(spark, store):
             spark, root, "m", mq, k=5, query_vec="qvecs"),
         "filtered_payload_exact": lambda: search_points(
             spark, root, "d", q, flt=flt, k=5),
+        "filtered_payload_masked": lambda: search_points(
+            spark, root, "dm", q, flt=flt, k=5),
         "filtered_composed": lambda: search_points(
             spark, root, "d", q, flt=flt, k=5, use_index="always",
             n_probe=2),
@@ -88,3 +108,46 @@ def test_search_routes_job_ledger(spark, store):
     got = {name: _jobs(spark, f"ledger:{name}", call)
            for name, call in routes.items()}
     assert got == LEDGER
+
+
+def _sidecar_opens(call) -> dict:
+    """{collection name/sidecar file: opens} while ``call()`` plans."""
+    opened: dict = {}
+    real = builtins.open
+
+    def counting(path, *args, **kwargs):
+        name = os.path.basename(str(path))
+        if name in (upsert.META_FILE, index.INDEX_META_FILE):
+            key = (os.path.basename(os.path.dirname(str(path))) + "/"
+                   + name)
+            opened[key] = opened.get(key, 0) + 1
+        return real(path, *args, **kwargs)
+
+    builtins.open = counting
+    try:
+        call()
+    finally:
+        builtins.open = real
+    return opened
+
+
+def test_search_routes_open_each_sidecar_once(spark, store):
+    """A search reads each JSON sidecar it needs once: the collection
+    meta, the vector index meta (read by the route) and the payload
+    index meta (read by the filter resolution)."""
+    root = store
+    q = spark.createDataFrame([(0, [1.0, 2.0, 3.0, 1.0, 0.5, 2.0])],
+                              "qid long, qvec array<double>")
+    ann = _sidecar_opens(lambda: knn.search_collection(
+        spark, root, "d", q, k=5, use_index="always", n_probe=2))
+    assert ann == {"collection=d/_collection_meta.json": 1,
+                   "embedding/meta.json": 1}
+    masked = _sidecar_opens(lambda: search_points(
+        spark, root, "dm", q, flt=FLT, k=5))
+    assert masked == {"collection=dm/_collection_meta.json": 1,
+                      "category__payload/meta.json": 1}
+    composed = _sidecar_opens(lambda: search_points(
+        spark, root, "d", q, flt=FLT, k=5, use_index="always", n_probe=2))
+    assert composed == {"collection=d/_collection_meta.json": 1,
+                        "embedding/meta.json": 1,
+                        "category__payload/meta.json": 1}
