@@ -84,7 +84,12 @@ def _lit(v) -> str:
             return r if ("e" in r or "E" in r) else r + "e0"
         return repr(v)
     if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
+        # both dialects read a doubled quote as one quote, but only Spark
+        # reads a backslash as an escape: a backslash becomes chr(92),
+        # which both fold back into one literal
+        parts = ["'" + p.replace("'", "''") + "'" for p in v.split("\\")]
+        return (parts[0] if len(parts) == 1
+                else "(" + " || chr(92) || ".join(parts) + ")")
     raise ValueError(f"unsupported filter literal type {type(v).__name__}")
 
 
@@ -946,7 +951,9 @@ def _match_ids(spark, root: str, collection: str, flt,
     leaf on the driver — keyword-index MatchValue/MatchAny/MatchContains
     leaves through ``payload_index._keyword_id_list``, HasId leaves by
     their literal ids — and then returns the intersected ids as a sorted
-    Python list of strings instead of a frame.  When any probed leaf
+    Python list of strings instead of a frame, one entry per row the
+    frame would hold (so ``len`` is its ``count()``; an id can repeat).
+    When any probed leaf
     can't (another index kind, a literal only Spark renders exactly, or
     more than ``payload_index.DRIVER_PROBE_CAP`` posting rows), the
     whole filter resolves through the Spark frames as
@@ -1093,10 +1100,15 @@ def _match_ids(spark, root: str, collection: str, flt,
         tuple(p for _, p, kind in probes
               if kind in ("text", "phrase", "text_prefix")))
     if driver:
-        got_ids: set | None = None
+        # the Spark path semi-joins every later leaf onto the first, so
+        # its rows are the first leaf's rows (repeats included) whose id
+        # every other leaf holds; the list keeps that multiplicity, and
+        # its length is the frame's count
+        first: list | None = None
+        others: set | None = None
         for key, payload, kind in probes:
             if kind == "hasid":
-                leaf = {str(v) for v in payload.ids}
+                leaf = [str(v) for v in payload.ids]
             elif kind in ("scalar", "contains"):
                 leaf = _payload_probe(
                     spark, root, collection, key, list(payload),
@@ -1106,9 +1118,13 @@ def _match_ids(spark, root: str, collection: str, flt,
                     break
             else:
                 break
-            got_ids = set(leaf) if got_ids is None else got_ids & set(leaf)
+            if first is None:
+                first = leaf
+            else:
+                others = set(leaf) if others is None else others & set(leaf)
         else:
-            return sorted(got_ids), residual
+            return sorted(i for i in first
+                          if others is None or i in others), residual
     ids = None
     for key, payload, kind in probes:
         if kind == "range":

@@ -403,7 +403,9 @@ def _apply_masks(spark: SparkSession, ipath: str, df: DataFrame,
     data layout past ``mask_compact_threshold``) and cleared entirely by a
     full rebuild; the join strategy is left to AQE — small mask tables
     broadcast on their own, and a collection under extreme unrebuilt churn
-    degrades to a shuffle join instead of OOMing a forced broadcast."""
+    degrades to a shuffle join instead of OOMing a forced broadcast.
+    ``payload_index._keyword_id_list`` applies the same rule to keyword
+    postings read on the driver; a change here must change it too."""
     mdir = os.path.join(ipath, "masks")
     if not os.path.isdir(mdir):
         return df

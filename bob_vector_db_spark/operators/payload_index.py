@@ -799,9 +799,13 @@ def _payload_probe(spark: SparkSession, root: str, collection: str,
 
 # A driver-side keyword probe reads at most this many posting rows (and
 # this many mask rows), counted from the parquet footers before any row
-# is read; past it the probe stays a Spark plan.  The ids it returns are
-# hashed on the driver at ~3 µs each.
-DRIVER_PROBE_CAP = 100_000
+# is read; past it the probe stays a Spark plan.  Measured on a
+# 200 000-point store at 4 cores (PERF_NOTES round 20): the driver path
+# wins up to ~5 000 candidates, ties at 10 000 and loses past it (1.7x
+# at 28 572, 4.5x at 100 000), because its literal id IN list grows with
+# the candidates while the Spark path stays ~flat.  The footers bound
+# the candidates from above, so no probe past the tie runs here.
+DRIVER_PROBE_CAP = 10_000
 
 # integral column types -> bit width: an int literal inside the range
 # casts to itself, so Spark renders it as str(int)
@@ -839,8 +843,6 @@ def _driver_keys(values: list, ctype: str | None,
     """(sorted distinct rendered literals, their sorted value buckets)
     computed on the driver, or None when a literal needs Spark's
     render."""
-    from ..functions.hashing import spark_bucket  # noqa: PLC0415
-
     rendered = [_driver_render(v, ctype) for v in values]
     if any(r is _SPARK_RENDER for r in rendered):
         return None
@@ -898,10 +900,15 @@ def _keyword_id_list(ipath: str, imeta: dict,
     driver: the rendered literals' ``val_bucket=b`` posting files, the
     pushed ``val IN`` predicate, then the masks under
     :func:`index._apply_masks`'s rule (a row survives unless its id has
-    a mask with ``gen <= max(upto_gen)``).  Sorted distinct string ids,
-    or None when the probe must stay a Spark plan: a literal only Spark
-    renders exactly, or more than :data:`DRIVER_PROBE_CAP` posting or
-    mask rows."""
+    a mask with ``gen <= max(upto_gen)``; the two copies of that rule
+    must agree, which
+    ``test_masked_index_answers_alike_on_driver_and_spark_paths`` pins).
+    Sorted string ids, one per surviving posting row — an id repeats
+    when a MatchAny over an array column hits several of its elements —
+    so its length is the row count of the Spark probe frame.  None when
+    the probe must stay a Spark plan: a literal only Spark renders
+    exactly, or more than :data:`DRIVER_PROBE_CAP` posting or mask
+    rows."""
     import pyarrow.dataset as ds  # noqa: PLC0415
 
     keys = _driver_keys(values, imeta.get("column_type"),
@@ -932,7 +939,7 @@ def _keyword_id_list(ipath: str, imeta: dict,
                         m.column("upto_gen").to_pylist()):
             if g is not None:
                 masked[i] = max(g, masked.get(i, g))
-    return sorted({i for i, g in rows if i not in masked or g > masked[i]})
+    return sorted(i for i, g in rows if i not in masked or g > masked[i])
 
 
 def _text_index_meta_checked(root: str, collection: str, column: str,

@@ -145,7 +145,8 @@ def _final_filter_ids(spark: SparkSession, root: str, collection: str,
     conditions evaluated on a bucket-pruned fetch of those ids (a no-op
     when the index answered every leaf)."""
     if residual == Filter():
-        return (local_frame(spark, [(i,) for i in ids], "id string")
+        return (local_frame(spark, [(i,) for i in sorted(set(ids))],
+                            "id string")
                 if isinstance(ids, list) else ids)
     rows = _fetch_ids(spark, root, collection, ids, tenant=tenant, meta=meta)
     if rows is None:

@@ -47,6 +47,9 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import spark_bucket
+from .filters import _lit
+
 BUCKET_COL = "id_bucket"
 DEFAULT_N_BUCKETS = 16  # local-mode default; size to ~#cores*4 fleet-wide
 
@@ -635,26 +638,16 @@ def read_rows_for_ids(spark: SparkSession, root: str, collection: str,
     restricts — guide §1.2/§2.4, don't run a subtree twice for nothing.
     The bucket probe (ONE execution of the subplan, driver-bounded by
     n_buckets) still happens either way."""
-    path = collection_path(root, collection)
-    id_col, n_buckets = _resolve_layout(root, collection, None, None)
+    meta = collection_meta(root, collection) or {}
+    id_col = meta.get("id_col", "id")
+    n_buckets = int(meta.get("n_buckets", DEFAULT_N_BUCKETS))
     wanted = ids_df.select(
         F.col(ids_df.columns[0]).cast("string").alias("_m_id"))
     b = _with_bucket(wanted, "_m_id", n_buckets)
     # O(n_buckets) driver-side list, same bound as every other touched set
     touched = sorted(r[0] for r in b.select(BUCKET_COL).distinct().collect())
-    if not touched or not _store_exists(path):
-        return None
-    pruned = spark.read.parquet(path).filter(
-        F.col(BUCKET_COL).isin(touched))
-    if tenant is not None:
-        tcol = _tenant_col(root, collection)
-        if tcol is None:
-            raise ValueError(
-                f"collection {collection!r} has no tenant_col; tenant-"
-                f"scoped fetches need the multitenant layout")
-        pruned = pruned.filter(F.col(tcol) == str(tenant))
-    pruned = pruned.drop(BUCKET_COL)
-    if not id_filter:
+    pruned = _bucket_pruned(spark, root, collection, meta, touched, tenant)
+    if pruned is None or not id_filter:
         return pruned
     return pruned.join(
         wanted, F.col(id_col).cast("string") == F.col("_m_id"), "left_semi")
@@ -664,22 +657,37 @@ def read_rows_for_id_list(spark: SparkSession, root: str, collection: str,
                           ids: list[str], tenant: str | None = None,
                           meta: dict | None = None) -> DataFrame | None:
     """Collection rows whose id is in ``ids``, a driver-side list of
-    string ids: the ids hash to their ``id_bucket`` set on the driver
-    (:func:`functions.hashing.spark_bucket`, the same bucket the store
-    wrote), which becomes a static partition filter, and the ids
-    themselves become one SQL ``IN`` list on the stringified id column.
+    string ids (repeats allowed): the ids hash to their ``id_bucket``
+    set on the driver (:func:`functions.hashing.spark_bucket`, the same
+    bucket the store wrote), which becomes a static partition filter,
+    and the distinct ids become one SQL ``IN`` list on the stringified
+    id column (one expression to parse, not one py4j call per id).
     Unlike :func:`read_rows_for_ids` this submits no job before the
     caller's action.  ``meta`` is the collection meta when the caller
     already holds it.  None when nothing can match (no ids, or an empty
     store)."""
-    from ..functions.hashing import spark_bucket  # noqa: PLC0415
-
     if meta is None:
         meta = collection_meta(root, collection) or {}
     id_col = meta.get("id_col", "id")
     n_buckets = int(meta.get("n_buckets", DEFAULT_N_BUCKETS))
+    distinct = sorted(set(ids))
+    touched = sorted({spark_bucket(i, n_buckets) for i in distinct})
+    pruned = _bucket_pruned(spark, root, collection, meta, touched, tenant)
+    if pruned is None:
+        return None
+    listed = ", ".join(_lit(i) for i in distinct)
+    return pruned.filter(F.expr(f"CAST(`{id_col}` AS STRING) IN ({listed})"))
+
+
+def _bucket_pruned(spark: SparkSession, root: str, collection: str,
+                   meta: dict, touched: list[int],
+                   tenant: str | None) -> DataFrame | None:
+    """The store read through the static ``id_bucket IN touched``
+    partition filter, scoped to ``tenant`` on a multitenant layout (both
+    partition levels prune), without the bucket column — the shared
+    read of the two id fetches.  None when nothing can match (no bucket,
+    or an empty store)."""
     path = collection_path(root, collection)
-    touched = sorted({spark_bucket(i, n_buckets) for i in ids})
     if not touched or not _store_exists(path):
         return None
     pruned = spark.read.parquet(path).filter(F.col(BUCKET_COL).isin(touched))
@@ -690,14 +698,7 @@ def read_rows_for_id_list(spark: SparkSession, root: str, collection: str,
                 f"collection {collection!r} has no tenant_col; tenant-"
                 f"scoped fetches need the multitenant layout")
         pruned = pruned.filter(F.col(tcol) == str(tenant))
-    listed = ", ".join(_sql_string(i) for i in ids)
-    return pruned.drop(BUCKET_COL).filter(
-        F.expr(f"CAST(`{id_col}` AS STRING) IN ({listed})"))
-
-
-def _sql_string(s: str) -> str:
-    """``s`` as a Spark SQL string literal (backslash-escaped quotes)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    return pruned.drop(BUCKET_COL)
 
 
 def materialize_small(spark: SparkSession, df: DataFrame,

@@ -202,6 +202,19 @@ def test_float_literals_render_as_double():
     assert _lit(7) == "7"  # ints stay integral (IN lists over int cols)
 
 
+def test_string_literals_read_back_alike(engines):
+    """A string leaving ``_lit`` reads back as itself in both engines —
+    quotes, backslashes (an escape to Spark, plain text to DuckDB) and
+    non-ASCII included — in one query per engine."""
+    from bob_vector_db_spark.operators.filters import _lit
+    spark, con = engines
+    vals = ["", "plain", "a'b", "''", "c\\d", "\\", "\\\\n", "x\\'y",
+            "tab\\t", "ü😀", "end\\"]
+    sel = ", ".join(f"{_lit(v)} AS c{i}" for i, v in enumerate(vals))
+    assert list(spark.sql(f"SELECT {sel}").first()) == vals
+    assert list(con.execute(f"SELECT {sel}").fetchone()) == vals
+
+
 @settings(max_examples=40, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(flt=_filter)

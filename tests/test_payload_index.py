@@ -273,6 +273,59 @@ def test_masked_index_answers_alike_on_driver_and_spark_paths(
     assert driver_out == spark_out and len(driver_out) == len(want)
 
 
+def test_driver_and_spark_paths_count_candidates_alike(
+        spark, tmp_path, monkeypatch):
+    """The candidate count behind ``max_candidates`` is the probe
+    frame's row count on both paths — a point whose array holds two
+    probed elements counts twice, a repeated HasId literal twice — so a
+    query passes or fails the guard the same way whichever path
+    resolved it."""
+    from bob_vector_db_spark.operators import payload_index
+    from bob_vector_db_spark.operators.filters import (
+        Filter,
+        HasId,
+        MatchContains,
+        _match_ids,
+    )
+
+    root = str(tmp_path / "store")
+    tags = [["a", "b"], ["a"], ["b", "c"], ["c"], ["a", "b", "c"]]
+    upsert.create_collection(
+        spark, root, "c", id_col="id", n_buckets=4,
+        df=spark.createDataFrame(
+            [(i, t, [float(i), 1.0]) for i, t in enumerate(tags)],
+            "id long, tags array<string>, vec array<double>"),
+        vector_config={"vec": {"size": 2, "distance": "cosine"}})
+    build_payload_index(spark, root, "c", "tags", n_val_buckets=4)
+    q = spark.createDataFrame([(0, [1.0, 1.0])],
+                              "qid long, qvec array<double>")
+    flts = [Filter(must=[HasId(["1", "1", "4", "3"]),
+                         MatchContains("tags", "a")]),
+            Filter(must=[MatchContains("tags", "b"),
+                         HasId(["0", "0", "2"])])]
+
+    def counts():
+        n = [len(ids) if isinstance(ids, list) else ids.count()
+             for ids, _ in (_match_ids(spark, root, "c", f, driver=True)
+                            for f in flts)]
+        for cap, want in ((5, False), (6, True)):
+            try:
+                out = filtered_search_indexed(
+                    spark, root, "c", q, column="tags", values=["a", "b"],
+                    k=10, max_candidates=cap)
+            except ValueError as e:
+                assert "filter matches 6 > 5 points" in str(e)
+                n.append(None)
+            else:
+                assert want and out.count() == 4
+                n.append(6)
+        return n
+
+    driver = counts()
+    monkeypatch.setattr(payload_index, "DRIVER_PROBE_CAP", 0)
+    assert counts() == driver == [3, 2, None, 6]
+
+
 def test_read_rows_for_id_list_quotes_ids(spark, tmp_path):
     """The id-list fetch renders string ids as SQL literals: quotes,
     backslashes and non-ASCII ids fetch exactly their rows, like the
