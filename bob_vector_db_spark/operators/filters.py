@@ -41,6 +41,7 @@ from __future__ import annotations
 import math
 import re
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -895,11 +896,11 @@ def _geo_leaf_bbox(leaf) -> tuple | None:
 
 def has_literal_id_leaves(flt) -> bool:
     """True when a top-level must leaf is a :class:`HasId` — then the
-    frame :func:`filter_match_ids` returns carries caller LITERALS that
-    may not exist in the store (posting-derived ids always do), so a
-    consumer that treats the frame as an authoritative point set (e.g.
-    counting it without a fetch) must route through ``read_rows_for_ids``
-    instead, where ghosts drop."""
+    candidates the resolution returns carry caller LITERALS that may not
+    exist in the store (posting-derived ids always do), so a consumer
+    that treats them as an authoritative point set (e.g. counting them
+    without a fetch) must fetch their rows first
+    (``upsert.Candidates.fetch``), where ghosts drop."""
     return any(isinstance(c, HasId) for c in as_filter(flt).must)
 
 
@@ -930,46 +931,61 @@ def _nested_indexable_leaves(leaf: NestedCondition,
 def filter_match_ids(spark, root: str, collection: str, flt,
                      allow_stale: bool = False):
     """Resolve a filter's indexable must-leaves through the persisted
-    payload indexes: each MatchValue/MatchAny over an indexed column
-    becomes a pruned value-bucket probe, the per-leaf id sets INTERSECT
-    (semi-joins — every set is already filter-selective), and the caller
-    applies the residual filter to the fetched rows.
+    payload indexes (:func:`_match_ids`): each leaf over a usable index
+    becomes a pruned probe, the per-leaf id sets INTERSECT, and the
+    caller applies the residual filter to the fetched rows.
 
-    Returns ``(ids_df | None, residual: Filter)``: None when no top-level
-    must leaf has a FRESH payload index (caller falls back to the pushed-
-    predicate scan — the right plan for non-selective filters anyway; a
-    stale index is usable only under ``allow_stale``).
+    Returns ``(ids_df | None, residual: Filter)``: a literal frame of the
+    distinct ids when the driver answered every probe, else the Spark
+    probe frame; None when no top-level must leaf has a FRESH payload
+    index (caller falls back to the pushed-predicate scan — the right
+    plan for non-selective filters anyway; a stale index is usable only
+    under ``allow_stale``).
     """
-    return _match_ids(spark, root, collection, flt, allow_stale)
+    cands, residual = _match_ids(spark, root, collection, flt, allow_stale)
+    return (None if cands is None else cands.frame()), residual
+
+
+class _Plan(NamedTuple):
+    """Which must-leaves of a filter the payload indexes answer, read
+    from the sidecars alone: ``probes`` are the ``(key, payload, kind)``
+    leaves to probe, ``residual`` the filter left to evaluate on the
+    fetched rows."""
+    probes: list
+    residual: Filter
+    meta: dict | None
+    imetas: dict
+    nested: dict
 
 
 def _match_ids(spark, root: str, collection: str, flt,
-               allow_stale: bool = False, meta: dict | None = None,
-               driver: bool = False):
-    """:func:`filter_match_ids` with the collection ``meta`` the caller
-    already read.  ``driver=True`` first tries to answer every probed
-    leaf on the driver — keyword-index MatchValue/MatchAny/MatchContains
-    leaves through ``payload_index._keyword_id_list``, HasId leaves by
-    their literal ids — and then returns the intersected ids as a sorted
-    Python list of strings instead of a frame, one entry per row the
-    frame would hold (so ``len`` is its ``count()``; an id can repeat).
-    When any probed leaf
-    can't (another index kind, a literal only Spark renders exactly, or
-    more than ``payload_index.DRIVER_PROBE_CAP`` posting rows), the
-    whole filter resolves through the Spark frames as
-    :func:`filter_match_ids` does."""
+               allow_stale: bool = False, meta: dict | None = None):
+    """The one filter resolution: ``(upsert.Candidates | None,
+    residual)``.  Plans from the sidecars (:func:`_plan`), then
+    resolves the probes (:func:`_resolve`); None when no leaf has a
+    usable index.  ``meta`` is the collection meta when the caller
+    holds it."""
+    plan = _plan(root, collection, flt, allow_stale, meta)
+    if not plan.probes:
+        return None, plan.residual
+    return _resolve(spark, root, collection, plan, allow_stale), \
+        plan.residual
+
+
+def _plan(root: str, collection: str, flt, allow_stale: bool = False,
+          meta: dict | None = None) -> _Plan:
+    """The probes a filter's top-level must-leaves resolve through: each
+    leaf whose payload index exists, is fresh (or ``allow_stale``), has
+    the index kind the leaf needs and can narrow (a geo box covering
+    at most ``payload_index._GEO_MAX_CELLS`` cells), plus every HasId
+    leaf.  Reads the JSON sidecars only — no probe, no Spark job."""
     from ..functions.text import tokenize_text_py  # noqa: PLC0415
     from .payload_index import (  # noqa: PLC0415
         TEXT_FORMAT,
         _band_ok,
-        _payload_probe,
-        geo_match_ids,
-        nested_match_ids,
+        _geo_cells,
         payload_index_meta,
-        payload_range_match_ids,
-        phrase_match_ids,
         prefix_band,
-        text_match_ids,
     )
     from .upsert import _version_of, collection_meta  # noqa: PLC0415
 
@@ -1059,9 +1075,12 @@ def _match_ids(spark, root: str, collection: str, flt,
                 # matches nothing, Qdrant's empty-token semantics)
                 return False
         elif kind == "geo":
+            bbox = _geo_leaf_bbox(payload)
             if itype != "geo" \
                     or imeta.get("lon_column") != payload.lon_key \
-                    or _geo_leaf_bbox(payload) is None:
+                    or bbox is None or _geo_cells(imeta, bbox) is None:
+                # a near-global box prunes nothing: it stays residual
+                # and the scan answers it
                 return False
         else:
             if itype in ("nested", "text", "geo"):
@@ -1086,7 +1105,7 @@ def _match_ids(spark, root: str, collection: str, flt,
               for key, payload, kind in flt.indexable_must_leaves()
               if usable(key, kind, payload)]
     if not probes:
-        return None, flt
+        return _Plan([], flt, meta, meta_cache, leaf_cache)
     residual = flt.residual_without(
         {k for k, _, kind in probes if kind == "scalar"},
         {k for k, _, kind in probes if kind == "contains"},
@@ -1099,75 +1118,82 @@ def _match_ids(spark, root: str, collection: str, flt,
         # silently erase the unanswered one
         tuple(p for _, p, kind in probes
               if kind in ("text", "phrase", "text_prefix")))
-    if driver:
-        # the Spark path semi-joins every later leaf onto the first, so
-        # its rows are the first leaf's rows (repeats included) whose id
-        # every other leaf holds; the list keeps that multiplicity, and
-        # its length is the frame's count
-        first: list | None = None
-        others: set | None = None
-        for key, payload, kind in probes:
-            if kind == "hasid":
-                leaf = [str(v) for v in payload.ids]
-            elif kind in ("scalar", "contains"):
-                leaf = _payload_probe(
-                    spark, root, collection, key, list(payload),
-                    allow_stale, imeta=meta_cache[key], cur=cur,
-                    driver=True)
-                if leaf is None:
-                    break
-            else:
+    return _Plan(probes, residual, meta, meta_cache, leaf_cache)
+
+
+def _resolve(spark, root: str, collection: str, plan: _Plan,
+             allow_stale: bool):
+    """The candidates of a plan's probes, intersected.  On the driver
+    when every probe allows it — HasId leaves by their literal ids,
+    keyword-index leaves through ``payload_index._keyword_id_list``
+    (a literal Python renders exactly, at most
+    ``payload_index.DRIVER_PROBE_CAP`` posting rows) — as a sorted id
+    list; otherwise every probe runs as a Spark frame and the frames
+    semi-join."""
+    from . import payload_index as pi  # noqa: PLC0415
+    from .localframe import local_frame  # noqa: PLC0415
+    from .upsert import Candidates  # noqa: PLC0415
+
+    # the Spark path semi-joins every later leaf onto the first, so its
+    # rows are the first leaf's rows (repeats included) whose id every
+    # other leaf holds; the list keeps that multiplicity
+    first: list | None = None
+    others: set | None = None
+    for key, payload, kind in plan.probes:
+        if kind == "hasid":
+            leaf = [str(v) for v in payload.ids]
+        elif kind in ("scalar", "contains") and plan.imetas[key].get(
+                "index_type", "keyword") == "keyword":
+            leaf = pi._keyword_id_list(
+                pi.index_path(root, collection, pi._payload_index_name(key)),
+                plan.imetas[key], list(payload))
+            if leaf is None:
                 break
-            if first is None:
-                first = leaf
-            else:
-                others = set(leaf) if others is None else others & set(leaf)
         else:
-            return sorted(i for i in first
-                          if others is None or i in others), residual
+            break
+        if first is None:
+            first = leaf
+        else:
+            others = set(leaf) if others is None else others & set(leaf)
+    else:
+        return Candidates(spark, root, collection,
+                          sorted(i for i in first
+                                 if others is None or i in others),
+                          plan.meta)
     ids = None
-    for key, payload, kind in probes:
+    for key, payload, kind in plan.probes:
         if kind == "range":
-            got = payload_range_match_ids(
+            got = pi.payload_range_match_ids(
                 spark, root, collection, key, gt=payload.gt,
                 gte=payload.gte, lt=payload.lt, lte=payload.lte,
                 allow_stale=allow_stale).select("id")
         elif kind == "nested":
-            got = nested_match_ids(
+            got = pi.nested_match_ids(
                 spark, root, collection, key,
-                leaf_cache[(key, id(payload))],
-                allow_stale=allow_stale)
+                plan.nested[(key, id(payload))], allow_stale=allow_stale)
         elif kind == "hasid":
             # the leaf's literal ids ARE the candidate frame (Qdrant
             # resolves HasIdCondition from its native id index); the
             # downstream fetch stays bucket-pruned on them
-            from .localframe import local_frame  # noqa: PLC0415
-
             got = local_frame(
                 spark, [(str(v),) for v in payload.ids], "id string")
         elif kind == "text":
-            got = text_match_ids(spark, root, collection, key,
-                                 payload.text, allow_stale=allow_stale)
+            got = pi.text_match_ids(spark, root, collection, key,
+                                    payload.text, allow_stale=allow_stale)
         elif kind == "text_prefix":
-            got = text_match_ids(spark, root, collection, key,
-                                 payload.text, allow_stale=allow_stale,
-                                 prefix=True)
+            got = pi.text_match_ids(spark, root, collection, key,
+                                    payload.text, allow_stale=allow_stale,
+                                    prefix=True)
         elif kind == "phrase":
-            got = phrase_match_ids(spark, root, collection, key,
-                                   payload.text, allow_stale=allow_stale)
+            got = pi.phrase_match_ids(spark, root, collection, key,
+                                      payload.text, allow_stale=allow_stale)
         elif kind == "geo":
-            got = geo_match_ids(spark, root, collection, key,
-                                _geo_leaf_bbox(payload),
-                                allow_stale=allow_stale)
-            if got is None:
-                # near-global box: the cell cover prunes nothing — this
-                # leaf contributes no narrowing (it STAYS residual
-                # regardless, so correctness is unchanged)
-                continue
+            got = pi.geo_match_ids(spark, root, collection, key,
+                                   _geo_leaf_bbox(payload),
+                                   allow_stale=allow_stale)
         else:
-            got = _payload_probe(spark, root, collection, key,
-                                 list(payload), allow_stale,
-                                 imeta=meta_cache[key],
-                                 cur=cur).select("id")
+            got = pi._payload_probe(spark, root, collection, key,
+                                    list(payload),
+                                    plan.imetas[key]).select("id")
         ids = got if ids is None else ids.join(got, "id", "left_semi")
-    return ids, residual
+    return Candidates(spark, root, collection, ids, plan.meta)

@@ -46,7 +46,6 @@ from .index import (
 )
 from .localframe import local_frame
 from .upsert import (
-    BUCKET_COL,
     _store_exists,
     collection_meta,
     collection_path,
@@ -335,10 +334,39 @@ def _geo_postings(df: DataFrame, id_col: str, lat_col: str, lon_col: str,
                                F.lit(n_val_buckets)).cast("int")))
 
 
+_GEO_MAX_CELLS = 4096
+
+
+def _geo_cells(imeta: dict, bbox: tuple,
+               max_cells: int = _GEO_MAX_CELLS) -> list[str] | None:
+    """The ``"i:j"`` grid cells of a geo index (``imeta``) covering the
+    (top, left, bottom, right) box — left > right wraps the
+    antimeridian — or None past ``max_cells`` cells."""
+    import math  # noqa: PLC0415
+
+    top, left, bottom, right = (float(v) for v in bbox)
+    step = float(imeta["cell_deg"])
+    i_lo = math.floor((max(bottom, -90.0) + 90.0) / step)
+    i_hi = math.floor((min(top, 90.0) + 90.0) / step)
+    lon_windows = ([(left, right)] if left <= right
+                   else [(left, 180.0), (-180.0, right)])
+    j_ranges = []
+    for lo, hi in lon_windows:
+        j_ranges.append((math.floor((max(lo, -180.0) + 180.0) / step),
+                         math.floor((min(hi, 180.0) + 180.0) / step)))
+    n_j = sum(j1 - j0 + 1 for j0, j1 in j_ranges)
+    if i_hi < i_lo or n_j <= 0:
+        return []
+    if (i_hi - i_lo + 1) * n_j > max_cells:
+        return None
+    return [f"{i}:{j}" for i in range(i_lo, i_hi + 1)
+            for j0, j1 in j_ranges for j in range(j0, j1 + 1)]
+
+
 def geo_match_ids(spark: SparkSession, root: str, collection: str,
                   lat_col: str, bbox: tuple,
                   allow_stale: bool = False,
-                  max_cells: int = 4096) -> DataFrame | None:
+                  max_cells: int = _GEO_MAX_CELLS) -> DataFrame | None:
     """CANDIDATE ids (a conservative SUPERSET) for a lat/lon bounding
     box, resolved from a GEO payload index: the box's covering grid
     cells enumerate driver-side, their hash buckets become a static
@@ -367,35 +395,17 @@ def geo_match_ids(spark: SparkSession, root: str, collection: str,
             f"data version {imeta['built_version']} but the collection is "
             f"at {collection_version(root, collection)}; "
             f"refresh_payload_index absorbs the mutations (or rebuild)")
-    import math  # noqa: PLC0415
-
-    top, left, bottom, right = (float(v) for v in bbox)
-    step = float(imeta["cell_deg"])
-    i_lo = math.floor((max(bottom, -90.0) + 90.0) / step)
-    i_hi = math.floor((min(top, 90.0) + 90.0) / step)
-    lon_windows = ([(left, right)] if left <= right
-                   else [(left, 180.0), (-180.0, right)])
-    j_ranges = []
-    for lo, hi in lon_windows:
-        j_ranges.append((math.floor((max(lo, -180.0) + 180.0) / step),
-                         math.floor((min(hi, 180.0) + 180.0) / step)))
-    n_j = sum(j1 - j0 + 1 for j0, j1 in j_ranges)
-    if i_hi < i_lo or n_j <= 0:
-        return spark.createDataFrame([], "id string")
-    if (i_hi - i_lo + 1) * n_j > max_cells:
+    cells = _geo_cells(imeta, bbox, max_cells)
+    if cells is None:
         return None
-    cells = [f"{i}:{j}" for i in range(i_lo, i_hi + 1)
-             for j0, j1 in j_ranges for j in range(j0, j1 + 1)]
+    if not cells:
+        return spark.createDataFrame([], "id string")
     ipath = index_path(root, collection, _payload_index_name(lat_col))
     pdir = os.path.join(ipath, "postings")
     if not os.path.isdir(pdir):
         return spark.createDataFrame([], "id string")
     n = imeta["n_val_buckets"]
-    buckets = sorted(
-        r[0] for r in local_frame(spark, [(c,) for c in cells],
-                                  "val string")
-        .select(F.pmod(F.xxhash64("val"), F.lit(n)).cast("int").alias("b"))
-        .distinct().collect())
+    buckets = sorted({spark_bucket(c, n) for c in cells})
     post = (spark.read.parquet(pdir)
             .filter(F.col("val_bucket").isin(buckets))
             .filter(F.col("val").isin(cells)))
@@ -733,21 +743,16 @@ def payload_match_ids(spark: SparkSession, root: str, collection: str,
     stored index: static ``val_bucket IN (...)`` partition filter + pushed
     ``val IN (...)`` predicate — only the probed value buckets are read."""
     return _payload_probe(spark, root, collection, column, values,
-                          allow_stale)
+                          _probe_meta(root, collection, column, allow_stale))
 
 
-def _payload_probe(spark: SparkSession, root: str, collection: str,
-                   column: str, values: list, allow_stale: bool,
-                   imeta: dict | None = None, cur: int | None = None,
-                   driver: bool = False):
-    """:func:`payload_match_ids` with the sidecars the caller already
-    read (``imeta``, the data version ``cur``).  ``driver=True`` answers
-    a keyword index on the driver instead (:func:`_keyword_id_list`):
-    the matching ids as a list, or None when the probe must stay a Spark
-    plan — a range index, a literal only Spark can render, or too many
-    posting rows.  The refusals are the same either way."""
-    if imeta is None:
-        imeta = payload_index_meta(root, collection, column)
+def _probe_meta(root: str, collection: str, column: str,
+                allow_stale: bool, cur: int | None = None) -> dict:
+    """The meta of the keyword or range index a value probe of
+    ``column`` reads, after the refusals: no index, a stale one (unless
+    ``allow_stale``; ``cur`` is the data version when the caller holds
+    it), or an index kind whole-value equality can't probe."""
+    imeta = payload_index_meta(root, collection, column)
     if imeta is None:
         raise ValueError(
             f"no persisted payload index for {collection!r}/{column!r}; "
@@ -775,17 +780,20 @@ def _payload_probe(spark: SparkSession, root: str, collection: str,
             f"payload index for {collection!r}/{column!r} holds grid-CELL "
             f"postings (geo); probe it through a geo filter leaf / "
             f"geo_match_ids — whole-value equality needs a keyword index")
-    ipath = index_path(root, collection, _payload_index_name(column))
+    return imeta
+
+
+def _payload_probe(spark: SparkSession, root: str, collection: str,
+                   column: str, values: list, imeta: dict) -> DataFrame:
+    """The ``(id, val)`` Spark probe frame of a keyword or range index
+    whose meta (``imeta``) passed the refusals."""
     if imeta.get("index_type", "keyword") == "range":
-        if driver:
-            return None
         # a RANGE index answers equality too (the Qdrant typed-index
         # model): each literal maps to its boundary bucket via the num
         # image, the predicate compares TYPED values
         return _range_probe(spark, root, collection, column, imeta,
                             [("eq", v) for v in values], eq_values=values)
-    if driver:
-        return _keyword_id_list(ipath, imeta, values)
+    ipath = index_path(root, collection, _payload_index_name(column))
     vals, buckets = _probe_keys(spark, values, imeta.get("column_type"),
                                 imeta["n_val_buckets"])
     pdir = os.path.join(ipath, "postings")
@@ -1515,57 +1523,37 @@ def filtered_search_indexed(spark: SparkSession, root: str, collection: str,
     pushed predicate (scanning beats fetching when most points match).
 
     A keyword index with at most :data:`DRIVER_PROBE_CAP` posting rows in
-    the probed buckets resolves on the driver: the candidate ids come
-    back as a list, so ``max_candidates`` checks its length and the fetch
-    filters on the ids as literals — no job runs before the scoring
-    action.  Otherwise the probe stays a Spark plan: the selectivity
-    guard is a distributed count and the id-bucket set a <= n_buckets-row
-    distinct aggregate, so those candidate ids never reach the
-    driver."""
+    the probed buckets resolves on the driver (:func:`_keyword_id_list`),
+    so ``max_candidates`` checks the list's length and no job runs
+    before the scoring action.  Otherwise the probe stays a Spark plan
+    whose count is one job.  Either way the candidates fetch their rows
+    through :meth:`upsert.Candidates.fetch`."""
     from .knn import _resolve_search_space, knn_join  # noqa: PLC0415
-    from .upsert import _version_of, read_rows_for_id_list  # noqa: PLC0415
+    from .upsert import Candidates, _version_of  # noqa: PLC0415
 
     meta, id_col, vector_name, metric = _resolve_search_space(
         root, collection, vector_name)
-    imeta = payload_index_meta(root, collection, column)
-    cur = _version_of(root, collection, meta)
-    ids = _payload_probe(spark, root, collection, column, values, False,
-                         imeta=imeta, cur=cur, driver=True)
-    if ids is not None:
-        n_cand = len(ids)
-    else:
-        cand = _payload_probe(spark, root, collection, column, values,
-                              False, imeta=imeta, cur=cur)
-        n_cand = cand.count()
+    imeta = _probe_meta(root, collection, column, False,
+                        cur=_version_of(root, collection, meta))
+    ids = None
+    if imeta.get("index_type", "keyword") == "keyword":
+        ids = _keyword_id_list(
+            index_path(root, collection, _payload_index_name(column)),
+            imeta, values)
+    if ids is None:
+        ids = _payload_probe(spark, root, collection, column, values,
+                             imeta).select("id")
+    cands = Candidates(spark, root, collection, ids, meta)
+    n_cand = cands.count()
     if n_cand > max_candidates:
         raise ValueError(
             f"filter matches {n_cand} > {max_candidates} points — not a "
             f"selective filter; use search_collection with a pushed "
             f"predicate instead")
-    if ids is not None:
-        fetched = read_rows_for_id_list(spark, root, collection, ids,
-                                        meta=meta)
-        if fetched is None:
-            fetched = read_collection(spark, root, collection).limit(0)
-        fetched = fetched.select(id_col, vector_name)
-    else:
-        n_buckets = int(meta.get("n_buckets", 16))
-        id_buckets = sorted(
-            r[0] for r in cand
-            .select(F.pmod(F.xxhash64("id"), F.lit(n_buckets)).cast("int")
-                    .alias("b")).distinct().collect()) if n_cand else []
-        # no broadcast hint: AQE broadcasts a selective id set on its own
-        # and degrades to a shuffle join near the max_candidates guard
-        # instead of forcing a 1M-row broadcast (the same policy as every
-        # other candidate semi-join in this repo)
-        fetched = (
-            spark.read.parquet(collection_path(root, collection))
-            .filter(F.col(BUCKET_COL).isin(id_buckets))
-            .join(cand.select("id").withColumnRenamed("id", "_f_id"),
-                  F.col(id_col).cast("string") == F.col("_f_id"),
-                  "left_semi")
-            .select(id_col, vector_name)
-        )
+    fetched = cands.fetch()
+    if fetched is None:
+        fetched = read_collection(spark, root, collection).limit(0)
+    fetched = fetched.select(id_col, vector_name)
     return knn_join(queries, fetched, k=k, query_id=query_id,
                     query_vec=query_vec, corpus_id=id_col,
                     corpus_vec=vector_name, exclude_self=False,

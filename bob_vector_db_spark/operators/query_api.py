@@ -35,7 +35,8 @@ from .query_search import (  # noqa: F401
     _final_filter_ids,
     _group_topk,
     _native_cut,
-    _resolve_candidates,
+    _filtered_rows,
+    _resolve_filter,
     _resolve_lookup,
     _resolve_search_space,
     _resolve_sparse_space,

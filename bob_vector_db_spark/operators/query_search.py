@@ -5,22 +5,20 @@ DSL.
 This is the surface the reference delegates to its store for
 (README.md:13 "Query the DB and return the results" over the payloads
 built at qdrant_embedder.py:119-128): every entry point takes ONE
-``Filter`` object and resolves it through a single planner,
-:func:`operators.filters.filter_match_ids`:
+``Filter`` object and resolves it through the one resolution,
+``filters._match_ids``:
 
-- **selective path** — top-level must MatchValue/MatchAny leaves over
-  columns with a FRESH payload index resolve to pruned posting probes;
-  the candidate ids fetch their rows through the store's static
-  id-bucket filter (O(|candidates|), never a collection scan) and only
-  the residual conditions evaluate on the fetched rows.  The searches,
-  scrolls and facets here resolve the filter through
-  ``filters._match_ids(driver=True)``: keyword-index leaves whose probed
-  buckets hold at most ``payload_index.DRIVER_PROBE_CAP`` posting rows
-  are read with pyarrow on the driver, so the candidate ids arrive as a
-  list, their count is free, and the fetch
-  (``upsert.read_rows_for_id_list``) filters on them as literals — no
-  Spark job runs before the final action.  Larger or other probes stay
-  Spark plans fetched through ``upsert.read_rows_for_ids``;
+- **selective path** — top-level must leaves over columns with a FRESH
+  payload index resolve to pruned posting probes; which ones is read
+  from the sidecars alone (the plan step, which ``strict`` also asks).
+  The candidates (``upsert.Candidates``) are a driver-side id list when
+  every probe allows it — keyword-index leaves whose probed buckets
+  hold at most ``payload_index.DRIVER_PROBE_CAP`` posting rows are read
+  with pyarrow, HasId leaves are their literals — so their count is
+  free and the fetch filters on them as literals; otherwise they are
+  Spark probe frames.  Either way they fetch their rows through the
+  store's static id-bucket filter (O(|candidates|), never a collection
+  scan) and only the residual conditions evaluate on them;
 - **scan path** — everything else compiles to one pushed SQL predicate
   (``Filter.to_sql`` → ``F.expr``), so Catalyst folds the leaf
   comparisons into the parquet scan.  Non-selective filters WANT this
@@ -43,20 +41,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .filters import (
-    Filter,
-    _match_ids,
-    as_filter,
-    filter_match_ids,
-    has_literal_id_leaves,
-)
+from .filters import Filter, _match_ids, as_filter, has_literal_id_leaves
 from .index import KINDS
 from .knn import Route, _resolve_search_space
 from .localframe import local_frame
 from .upsert import (
+    Candidates,
     collection_meta,
     read_collection,
-    read_rows_for_id_list,
     read_rows_for_ids,
 )
 
@@ -78,80 +70,60 @@ def _scope_tenant(root: str, collection: str, rows: DataFrame,
     return rows.filter(F.col(tcol) == str(tenant))
 
 
-def _fetch_ids(spark: SparkSession, root: str, collection: str, ids,
-               tenant: str | None = None,
-               meta: dict | None = None) -> DataFrame | None:
-    """Rows of the candidate ``ids`` through the store's static id-bucket
-    filter: a driver-side id list (``filters._match_ids(driver=True)``)
-    filters on the ids as literals, a Spark id frame probes its buckets
-    first (``read_rows_for_ids``)."""
-    if isinstance(ids, list):
-        return read_rows_for_id_list(spark, root, collection, ids,
-                                     tenant=tenant, meta=meta)
-    return read_rows_for_ids(spark, root, collection, ids, tenant=tenant)
-
-
-def _resolve_candidates(spark: SparkSession, root: str, collection: str,
-                        flt, use_payload_index,
-                        max_candidates: int,
-                        resolution: tuple | None = None,
-                        meta: dict | None = None
-                        ) -> tuple[DataFrame | None, Filter]:
-    """Shared dispatch: (candidate rows | None, residual filter).  None
-    means "use the pushed-predicate scan" — no usable index, the filter
-    matched too many points for the fetch plan to win, or routing was
-    disabled.  ``resolution`` is an optional precomputed
-    ``(ids, residual, n_cand)`` from an earlier resolution in the same
-    call (the composed-search dispatch) — reusing it avoids a second
-    posting probe + count when 'auto' declines the composition.  The
-    filter resolves on the driver when it can (``filters._match_ids``),
-    and ``meta`` is the collection meta when the caller holds it."""
-    flt = as_filter(flt)
+def _resolve_filter(spark: SparkSession, root: str, collection: str, flt,
+                    use_payload_index, meta: dict | None = None
+                    ) -> tuple[Candidates | None, Filter]:
+    """The filter's one resolution (``filters._match_ids``):
+    ``(candidates | None, residual)``.  None — with the whole filter as
+    the residual — when routing is disabled or no top-level must leaf
+    has a usable payload index.  ``meta`` is the collection meta when
+    the caller holds it."""
     if use_payload_index is False:
-        return None, flt
-    if resolution is not None:
-        ids, residual, n_pre = resolution
-    else:
-        ids, residual = _match_ids(spark, root, collection, flt, meta=meta,
-                                   driver=True)
-        n_pre = None
-    if ids is None:
+        return None, as_filter(flt)
+    return _match_ids(spark, root, collection, flt, meta=meta)
+
+
+def _filtered_rows(spark: SparkSession, root: str, collection: str, flt,
+                   cands: Candidates | None, residual: Filter,
+                   use_payload_index, max_candidates: int,
+                   tenant: str | None) -> DataFrame:
+    """The rows matching ``flt``, resolved to ``(cands, residual)``: the
+    candidates' fetch with the residual applied, or the pushed-predicate
+    scan of the whole filter when there are no candidates, or more than
+    ``max_candidates`` (the fetch plan stops winning there).  Scoped to
+    ``tenant`` either way."""
+    if cands is None and use_payload_index == "always":
+        raise ValueError(
+            f"use_payload_index='always' but no top-level must leaf of "
+            f"the filter has a fresh payload index on {collection!r}; "
+            f"build_payload_index the filtered column(s) or use 'auto'")
+    if cands is not None and cands.count() > max_candidates:
         if use_payload_index == "always":
             raise ValueError(
-                f"use_payload_index='always' but no top-level must leaf of "
-                f"the filter has a fresh payload index on {collection!r}; "
-                f"build_payload_index the filtered column(s) or use 'auto'")
-        return None, flt
-    n_cand = n_pre if n_pre is not None else (
-        len(ids) if isinstance(ids, list) else ids.count())
-    if n_cand > max_candidates:
-        if use_payload_index == "always":
-            raise ValueError(
-                f"filter matches {n_cand} > {max_candidates} points — not "
-                f"selective; use the scan path (use_payload_index='auto')")
-        return None, flt
-    rows = _fetch_ids(spark, root, collection, ids, meta=meta)
+                f"filter matches {cands.count()} > {max_candidates} points "
+                f"— not selective; use the scan path "
+                f"(use_payload_index='auto')")
+        cands = None
+    if cands is None:
+        return (read_collection(spark, root, collection, tenant=tenant)
+                .filter(as_filter(flt).to_column()))
+    rows = cands.fetch()
     if rows is None:  # empty store / empty candidate set
         rows = read_collection(spark, root, collection).limit(0)
-    return rows.filter(residual.to_column()), residual
+    return _scope_tenant(root, collection,
+                         rows.filter(residual.to_column()), tenant)
 
 
-def _final_filter_ids(spark: SparkSession, root: str, collection: str,
-                      ids, residual: Filter, id_col: str,
-                      tenant: str | None = None,
-                      meta: dict | None = None) -> DataFrame:
-    """The filter's FINAL candidate id frame: the payload-index id set
-    (a frame, or a driver-side id list) narrowed by the residual
-    conditions evaluated on a bucket-pruned fetch of those ids (a no-op
-    when the index answered every leaf)."""
+def _final_filter_ids(cands: Candidates, residual: Filter, id_col: str,
+                      tenant: str | None = None) -> DataFrame:
+    """The filter's FINAL candidate id frame: the candidates narrowed by
+    the residual conditions evaluated on a bucket-pruned fetch of them
+    (a no-op when the index answered every leaf)."""
     if residual == Filter():
-        return (local_frame(spark, [(i,) for i in sorted(set(ids))],
-                            "id string")
-                if isinstance(ids, list) else ids)
-    rows = _fetch_ids(spark, root, collection, ids, tenant=tenant, meta=meta)
+        return cands.frame()
+    rows = cands.fetch(tenant)
     if rows is None:
-        return (local_frame(spark, [], "id string")
-                if isinstance(ids, list) else ids.limit(0))
+        return cands.frame().limit(0)
     return rows.filter(residual.to_column()).select(id_col)
 
 
@@ -166,19 +138,16 @@ def _filter_candidate_ids(spark: SparkSession, root: str, collection: str,
     a posting search has no pushed-predicate alternative (the payload
     lives in the collection, not the postings) — the candidate
     semi-join IS the plan at every selectivity, and AQE sizes it."""
-    flt_o = as_filter(flt)
-    ids = residual = None
-    if use_payload_index is not False:
-        ids, residual = filter_match_ids(spark, root, collection, flt_o)
-    if ids is not None:
-        return _final_filter_ids(spark, root, collection, ids,
-                                 residual, id_col)
+    cands, residual = _resolve_filter(spark, root, collection, flt,
+                                      use_payload_index)
+    if cands is not None:
+        return _final_filter_ids(cands, residual, id_col)
     if use_payload_index == "always":
         raise ValueError(
             f"use_payload_index='always' but no top-level must leaf of "
             f"the filter has a fresh payload index on {collection!r}")
     return (read_collection(spark, root, collection)
-            .filter(flt_o.to_column()).select(id_col))
+            .filter(residual.to_column()).select(id_col))
 
 
 def _check_strict_k(spark, root: str, collection: str, strict, flt,
@@ -271,7 +240,8 @@ def search_text_points(spark: SparkSession, root: str, collection: str,
 
 
 def _filtered_indexed_search(spark: SparkSession, root: str, collection: str,
-                             queries: DataFrame, flt, k: int, route: Route,
+                             queries: DataFrame, cands: Candidates | None,
+                             residual: Filter, k: int, route: Route,
                              query_id: str, query_vec: str,
                              round_to: int | None, use_payload_index,
                              n_probe: int | None,
@@ -281,24 +251,19 @@ def _filtered_indexed_search(spark: SparkSession, root: str, collection: str,
                              id_col: str,
                              rescore: bool = True,
                              oversampling: float | None = None,
-                             meta: dict | None = None,
-                             ) -> tuple[DataFrame | None, tuple | None]:
+                             ) -> DataFrame | None:
     """Compose the payload index with the route's fresh ANN artifact
-    (``route.imeta``): filter → candidate ids (pruned posting probes),
-    residual conditions evaluated on a bucket-pruned fetch of those ids,
-    and the final id set semi-joined INSIDE the probed ``list_id``
+    (``route.imeta``): the filter's candidates (pruned posting probes),
+    residual conditions evaluated on a bucket-pruned fetch of them, and
+    the final id set semi-joined INSIDE the probed ``list_id``
     partitions of the vector index
     (``index.search_indexed(candidate_ids=...)``) — the two prunings in
     one plan.
 
-    Returns ``(result | None, resolution | None)``: result None when
-    "auto" decides the exact path wins (no payload-index route, or a
-    candidate set small enough that the bucket-pruned exact fetch is
-    cheaper AND exact) — then ``resolution`` carries the
-    already-computed ``(ids, residual, n_cand)`` so the exact path
-    doesn't re-probe the postings.  Raises under "always" when
-    composition can't run.  ``meta`` is the collection meta the caller
-    read."""
+    None when "auto" decides the exact path wins (no payload-index
+    route, or a candidate set small enough that the bucket-pruned exact
+    fetch is cheaper AND exact); that path reuses ``cands``.  Raises
+    under "always" when composition can't run."""
     from .index import _search_route  # noqa: PLC0415
 
     if use_payload_index is False:
@@ -306,42 +271,21 @@ def _filtered_indexed_search(spark: SparkSession, root: str, collection: str,
             raise ValueError(
                 "use_index='always' needs the payload-index candidate "
                 "path; use_payload_index=False disables it")
-        return None, None
-    ids, residual = _match_ids(spark, root, collection, flt, meta=meta,
-                               driver=True)
-    if ids is None:
+        return None
+    if cands is None:
         if route.always:
             raise ValueError(
                 f"use_index='always' but no top-level must leaf of the "
                 f"filter has a fresh payload index on {collection!r}; "
                 f"build_payload_index the filtered column(s)")
-        return None, None
-    if isinstance(ids, list):
-        n_cand = len(ids)  # resolved on the driver: the count is free
-    else:
-        # the candidate id frame feeds THREE consumers (the selectivity
-        # count, the residual fetch's bucket probe, the final semi-join)
-        # — materialize the bounded posting-probe output ONCE through the
-        # capped driver roundtrip (the rescore-tail pattern; lazy
-        # fallback past the cap keeps the unbounded case two pruned
-        # passes instead of a multi-GB collect).  The probe's own
-        # val_bucket pruning is plan-asserted on the probe frame in
-        # tests/test_payload_index.py; it no longer appears in the
-        # composed plan because it already ran.
-        from .upsert import materialize_small  # noqa: PLC0415
-
-        mat = materialize_small(spark, ids)
-        over_cap = mat is ids  # identity return = the lazy fallback fired
-        ids = mat
-        # past the materialize cap the candidate set is certainly above
-        # the (much smaller) threshold — skip the count; downstream
-        # consumers that need an exact n recount lazily
-        n_cand = None if over_cap or route.always else ids.count()
+        return None
+    # the candidates feed the selectivity count, the residual fetch and
+    # the final semi-join: hold them once.  Past the materialize cap the
+    # set is certainly above the (much smaller) threshold — no count
+    held = cands.materialize()
     if not route.always:
-        if n_cand is not None and n_cand <= index_candidate_threshold:
-            # few candidates: the pruned exact fetch is the plan — hand
-            # the resolution back so it isn't recomputed
-            return None, (ids, residual, n_cand)
+        if held and cands.count() <= index_candidate_threshold:
+            return None  # few candidates: the pruned exact fetch wins
         if n_probe is None and route.imeta["kind"] == "ivf":
             # full probe over the FLOAT artifact reads as much as the
             # pushed-predicate scan and adds a semi-join — no IO win, so
@@ -349,15 +293,14 @@ def _filtered_indexed_search(spark: SparkSession, root: str, collection: str,
             # (explicit n_probe) or the artifact is quantized (ivf_sq /
             # ivf_pq codes are 4-32x smaller than the float column).
             # 'always' still composes as asked.
-            return None, (ids, residual, n_cand)
-    final_ids = _final_filter_ids(spark, root, collection, ids, residual,
-                                  id_col, tenant=tenant, meta=meta)
+            return None
+    final_ids = _final_filter_ids(cands, residual, id_col, tenant=tenant)
     return _search_route(spark, root, collection, queries, route, k=k,
                          n_probe=n_probe, query_id=query_id,
                          query_vec=query_vec, exclude_self=False,
                          round_to=round_to, rerank_factor=rerank_factor,
                          rescore=rescore, oversampling=oversampling,
-                         tenant=tenant, candidate_ids=final_ids), None
+                         tenant=tenant, candidate_ids=final_ids)
 
 
 def search_points(spark: SparkSession, root: str, collection: str,
@@ -459,23 +402,20 @@ def search_points(spark: SparkSession, root: str, collection: str,
             # knn_join directly, which thread round_to natively.
             out = out.withColumn("sim", F.round("sim", int(round_to)))
     else:
-        out, resolution = None, None
+        cands, residual = _resolve_filter(spark, root, collection, flt,
+                                          use_payload_index, meta)
+        out = None
         if route.imeta is not None:
-            out, resolution = _filtered_indexed_search(
-                spark, root, collection, queries, flt, k + offset, route,
-                query_id, query_vec, round_to, use_payload_index, n_probe,
-                rerank_factor, index_candidate_threshold, tenant, id_col,
-                rescore=rescore, oversampling=oversampling, meta=meta)
+            out = _filtered_indexed_search(
+                spark, root, collection, queries, cands, residual,
+                k + offset, route, query_id, query_vec, round_to,
+                use_payload_index, n_probe, rerank_factor,
+                index_candidate_threshold, tenant, id_col,
+                rescore=rescore, oversampling=oversampling)
         if out is None:
-            cand, _residual = _resolve_candidates(
-                spark, root, collection, flt, use_payload_index,
-                max_candidates, resolution=resolution, meta=meta)
-            if cand is None:
-                corpus = (read_collection(spark, root, collection,
-                                          tenant=tenant)
-                          .filter(as_filter(flt).to_column()))
-            else:
-                corpus = _scope_tenant(root, collection, cand, tenant)
+            corpus = _filtered_rows(spark, root, collection, flt, cands,
+                                    residual, use_payload_index,
+                                    max_candidates, tenant)
             out = exact_scan(queries, corpus.select(id_col, vector_name),
                              route, k=k + offset, query_id=query_id,
                              query_vec=query_vec, corpus_id=id_col,
@@ -685,24 +625,24 @@ def count_points(spark: SparkSession, root: str, collection: str,
     if flt is None:
         return read_collection(spark, root, collection, tenant=tenant).count()
     flt = as_filter(flt)
-    if use_payload_index is not False:
-        ids, residual = filter_match_ids(spark, root, collection, flt)
-        if ids is not None:
-            # HasId leaves contribute LITERAL ids that may not exist in
-            # the store (posting-derived ids always do) — those must go
-            # through the fetch so ghosts drop from the count
-            if residual == Filter() and tenant is None \
-                    and not has_literal_id_leaves(flt):
-                return ids.count()
-            rows = read_rows_for_ids(spark, root, collection, ids)
-            if rows is None:
-                return 0
-            rows = _scope_tenant(root, collection, rows, tenant)
-            return rows.filter(residual.to_column()).count()
-        if use_payload_index == "always":
-            raise ValueError(
-                f"use_payload_index='always' but no top-level must leaf "
-                f"has a fresh payload index on {collection!r}")
+    cands, residual = _resolve_filter(spark, root, collection, flt,
+                                      use_payload_index)
+    if cands is not None:
+        # HasId leaves contribute LITERAL ids that may not exist in the
+        # store (posting-derived ids always do) — those must go through
+        # the fetch so ghosts drop from the count
+        if residual == Filter() and tenant is None \
+                and not has_literal_id_leaves(flt):
+            return cands.count()
+        rows = cands.fetch()
+        if rows is None:
+            return 0
+        rows = _scope_tenant(root, collection, rows, tenant)
+        return rows.filter(residual.to_column()).count()
+    if use_payload_index == "always":
+        raise ValueError(
+            f"use_payload_index='always' but no top-level must leaf "
+            f"has a fresh payload index on {collection!r}")
     return (read_collection(spark, root, collection, tenant=tenant)
             .filter(flt.to_column()).count())
 
@@ -742,12 +682,10 @@ def facet_values(spark: SparkSession, root: str, collection: str,
                 return got
         base = read_collection(spark, root, collection, tenant=tenant)
     else:
-        cand, _ = _resolve_candidates(
-            spark, root, collection, flt, use_payload_index, max_candidates)
-        base = (_scope_tenant(root, collection, cand, tenant)
-                if cand is not None else
-                read_collection(spark, root, collection, tenant=tenant)
-                .filter(as_filter(flt).to_column()))
+        base = _filtered_rows(
+            spark, root, collection, flt,
+            *_resolve_filter(spark, root, collection, flt, use_payload_index),
+            use_payload_index, max_candidates, tenant)
     meta = collection_meta(root, collection) or {}
     id_col = meta.get("id_col", "id")
     dtype = base.select(F.col(key)).schema[0].dataType
@@ -819,7 +757,10 @@ def scroll_points(spark: SparkSession, root: str, collection: str,
         strict_mod.check_filter(spark, root, collection, flt, _sm)
     meta = collection_meta(root, collection) or {}
     id_col = meta.get("id_col", "id")
-    page, resolution = None, None
+    page = None
+    if flt is not None:
+        cands, residual = _resolve_filter(spark, root, collection, flt,
+                                          use_payload_index, meta)
     if order_by is not None and tenant is None and use_payload_index \
             is not False and (
             start_from is not None
@@ -835,16 +776,12 @@ def scroll_points(spark: SparkSession, root: str, collection: str,
         # below settles it.  A FILTER composes when it resolves to an
         # EXACT id set (empty residual): the candidates semi-join
         # inside each pruned bucket window — filter and order in one
-        # plan, nothing sorted but the page; the probe result is
-        # cached in ``resolution`` so a fallback never re-probes.
+        # plan, nothing sorted but the page; a fallback reuses them.
         from .payload_index import range_ordered_page  # noqa: PLC0415
 
         cand_ids, routable = None, True
         if flt is not None:
-            ids_r, residual = filter_match_ids(spark, root,
-                                               collection, flt)
-            resolution = (ids_r, residual, None)
-            if ids_r is None or residual != Filter() \
+            if cands is None or residual != Filter() \
                     or has_literal_id_leaves(flt):
                 # a residual (or HasId ghosts) would need a fetch +
                 # re-page — the scan settles those exactly
@@ -853,24 +790,13 @@ def scroll_points(spark: SparkSession, root: str, collection: str,
                 # selectivity guard (ADVICE r9): a non-selective id set
                 # would semi-join into every geometric widening round
                 # where the pushed-predicate scan wins outright.  The
-                # capped count is exact whenever it is <= the cap, so
-                # it feeds the fallback's resolution as n_pre too — the
-                # scan path never re-counts.  A set that passes the
-                # guard is provably bounded, so materialize it ONCE
-                # (capped driver roundtrip, lazy fallback past the
-                # internal cap) — the widening loop and the final page
-                # then reuse rows instead of re-running the posting
-                # probe per consumer (r10 review finding).
-                n_cand = ids_r.limit(max_candidates + 1).count()
-                if n_cand > max_candidates:
-                    resolution = (ids_r, residual, n_cand)
+                # widening loop and the final page read the candidates
+                # several times, so they are held once first.
+                cands.materialize()
+                if cands.count() > max_candidates:
                     routable = False
                 else:
-                    from .upsert import materialize_small  # noqa: PLC0415
-
-                    ids_r = materialize_small(spark, ids_r)
-                    resolution = (ids_r, residual, n_cand)
-                    cand_ids = ids_r
+                    cand_ids = cands.frame()
         if routable:
             coll = read_collection(spark, root, collection)
             id_type = coll.schema[id_col].dataType.simpleString()
@@ -890,13 +816,9 @@ def scroll_points(spark: SparkSession, root: str, collection: str,
         if flt is None:
             base = read_collection(spark, root, collection, tenant=tenant)
         else:
-            cand, _ = _resolve_candidates(
-                spark, root, collection, flt, use_payload_index,
-                max_candidates, resolution=resolution)
-            base = (_scope_tenant(root, collection, cand, tenant)
-                    if cand is not None else
-                    read_collection(spark, root, collection, tenant=tenant)
-                    .filter(as_filter(flt).to_column()))
+            base = _filtered_rows(spark, root, collection, flt, cands,
+                                  residual, use_payload_index,
+                                  max_candidates, tenant)
     if page is not None:
         pass  # index-answered
     elif order_by is None:
@@ -1119,12 +1041,10 @@ def sample_points(spark: SparkSession, root: str, collection: str,
     if flt is None:
         base = read_collection(spark, root, collection, tenant=tenant)
     else:
-        cand, _ = _resolve_candidates(
-            spark, root, collection, flt, use_payload_index, max_candidates)
-        base = (_scope_tenant(root, collection, cand, tenant)
-                if cand is not None else
-                read_collection(spark, root, collection, tenant=tenant)
-                .filter(as_filter(flt).to_column()))
+        base = _filtered_rows(
+            spark, root, collection, flt,
+            *_resolve_filter(spark, root, collection, flt, use_payload_index),
+            use_payload_index, max_candidates, tenant)
     order = F.md5(F.concat(F.lit(str(seed)), F.lit("|"),
                            F.col(id_col).cast("string")))
     return base.orderBy(order, F.col(id_col)).limit(n)

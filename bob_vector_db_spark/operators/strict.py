@@ -154,7 +154,7 @@ def check_filter(spark, root: str, collection: str, flt,
     is a full collection scan."""
     if flt is None or sm.unindexed_filtering:
         return
-    from .filters import as_filter, filter_match_ids  # noqa: PLC0415
+    from .filters import _plan, as_filter  # noqa: PLC0415
     from .payload_index import payload_index_meta  # noqa: PLC0415
 
     f = as_filter(flt)
@@ -165,10 +165,10 @@ def check_filter(spark, root: str, collection: str, flt,
             "leaf (should/must_not/negation shapes scan) — add an "
             "indexed must condition, or relax "
             "StrictMode(unindexed_filtering=True)")
-    # the same resolution the search itself would run decides usability;
-    # when it declines, name each leaf whose index is absent vs unusable
-    ids, _residual = filter_match_ids(spark, root, collection, f)
-    if ids is not None:
+    # the plan step of the search's own resolution decides usability,
+    # from the sidecars alone; when it declines, name each leaf whose
+    # index is absent vs unusable
+    if _plan(root, collection, f).probes:
         return
     missing, unusable = [], []
     for key, _payload, kind in leaves:

@@ -33,8 +33,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import spark_bucket
 from ..functions.text import ws_tokens
-from .localframe import local_frame
 
 
 def bm25_topk(docs: DataFrame, terms: list[str], k: int = 10,
@@ -330,14 +330,10 @@ def bm25_topk_indexed(spark: SparkSession, root: str, collection: str,
                 else f"id {imeta['id_type']}, score double, rank int")
         return spark.createDataFrame([], cols)
     terms_l = sorted({t.lower() for t in terms})
-    # the probed buckets come from the SAME hash Spark wrote with — computed
-    # on a |terms|-row literal frame, collected O(|terms|)
-    buckets = sorted(
-        r[0] for r in local_frame(spark, [(t,) for t in terms_l],
-                                  "term string")
-        .select(F.pmod(F.xxhash64("term"),
-                       F.lit(imeta["n_term_buckets"])).cast("int").alias("b"))
-        .distinct().collect())
+    # the probed buckets come from the SAME hash Spark wrote with,
+    # computed on the driver
+    buckets = sorted({spark_bucket(t, imeta["n_term_buckets"])
+                      for t in terms_l})
     ipath = index_path(root, collection, _text_index_name(text_col))
     from .index import _apply_masks  # noqa: PLC0415
 
@@ -394,12 +390,8 @@ def match_text_ids(spark: SparkSession, root: str, collection: str,
         raise ValueError("match_text_ids needs at least one token")
     if not imeta["n_docs"]:
         return spark.createDataFrame([], f"id {imeta['id_type']}")
-    buckets = sorted(
-        r[0] for r in local_frame(spark, [(t,) for t in terms],
-                                  "term string")
-        .select(F.pmod(F.xxhash64("term"),
-                       F.lit(imeta["n_term_buckets"])).cast("int").alias("b"))
-        .distinct().collect())
+    buckets = sorted({spark_bucket(t, imeta["n_term_buckets"])
+                      for t in terms})
     ipath = index_path(root, collection, _text_index_name(text_col))
     post = _apply_masks(
         spark, ipath,

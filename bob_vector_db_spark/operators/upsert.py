@@ -622,7 +622,8 @@ def read_rows_for_ids(spark: SparkSession, root: str, collection: str,
     Spark job over ``ids_df`` (a distinct collect of at most n_buckets
     rows) before the caller's own action runs; ids already on the driver
     fetch through :func:`read_rows_for_id_list` instead, which needs no
-    job.  None when nothing can match (empty id set or empty store) —
+    job (:meth:`Candidates.fetch` picks between the two).  None when
+    nothing can match (empty id set or empty store) —
     callers skip their append step.
 
     ``tenant`` adds the outer-level static tenant filter on a multitenant
@@ -742,6 +743,65 @@ def materialize_small(spark: SparkSession, df: DataFrame,
     if not rows:
         return df.limit(0)
     return spark.createDataFrame(rows, df.schema)
+
+
+class Candidates:
+    """The candidate point ids one filter resolution found
+    (``filters._match_ids``), in either of two forms: a sorted
+    driver-side list of string ids, or a Spark frame whose first column
+    holds them.  Both hold one entry per probe row (an id repeats when a
+    probe of an array column hits it twice, or a HasId literal repeats),
+    so :meth:`count` reads the same whichever form answered.  The
+    consumers ask the value, never the form."""
+
+    def __init__(self, spark: SparkSession, root: str, collection: str,
+                 ids, meta: dict | None = None):
+        self.spark, self.root, self.collection = spark, root, collection
+        self.ids, self.meta = ids, meta
+        self._n: int | None = None
+        # True: rows held (a list, or a materialized frame); False: the
+        # frame stayed lazy past the materialize cap; None: not tried
+        self._held = True if isinstance(ids, list) else None
+
+    def count(self) -> int:
+        """The candidate count: free for a list, one job for a frame
+        (counted once)."""
+        if self._n is None:
+            self._n = (len(self.ids) if isinstance(self.ids, list)
+                       else self.ids.count())
+        return self._n
+
+    def materialize(self) -> bool:
+        """Hold the ids before several consumers read them: a Spark
+        probe frame runs once through :func:`materialize_small` (lazy
+        past its cap).  True when the ids are held."""
+        if self._held is None:
+            mat = materialize_small(self.spark, self.ids)
+            self._held = mat is not self.ids
+            self.ids = mat
+        return self._held
+
+    def frame(self) -> DataFrame:
+        """The ids as a frame: a literal ``id string`` frame of the
+        distinct ids for a list, the frame itself otherwise."""
+        if not isinstance(self.ids, list):
+            return self.ids
+        from .localframe import local_frame  # noqa: PLC0415
+
+        return local_frame(self.spark, [(i,) for i in sorted(set(self.ids))],
+                           "id string")
+
+    def fetch(self, tenant: str | None = None) -> DataFrame | None:
+        """The candidates' rows through the store's static id-bucket
+        filter (:func:`read_rows_for_id_list` for a list, no job;
+        :func:`read_rows_for_ids` for a frame, one bucket job).  None
+        when nothing can match."""
+        if isinstance(self.ids, list):
+            return read_rows_for_id_list(self.spark, self.root,
+                                         self.collection, self.ids,
+                                         tenant=tenant, meta=self.meta)
+        return read_rows_for_ids(self.spark, self.root, self.collection,
+                                 self.ids, tenant=tenant)
 
 
 def last_write_wins(df: DataFrame, id_col: str = "id",

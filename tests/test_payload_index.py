@@ -255,9 +255,9 @@ def test_masked_index_answers_alike_on_driver_and_spark_paths(
                               "qid long, qvec array<double>")
 
     def answer():
-        ids, _ = _match_ids(spark, root, "c", flt, driver=True)
+        cands, _ = _match_ids(spark, root, "c", flt)
         out = query_api.search_points(spark, root, "c", q, flt=flt, k=40)
-        return ids, sorted(map(tuple, out.collect()))
+        return cands.ids, sorted(map(tuple, out.collect()))
 
     driver_ids, driver_out = answer()
     assert isinstance(driver_ids, list)
@@ -306,8 +306,8 @@ def test_driver_and_spark_paths_count_candidates_alike(
 
     def counts():
         n = [len(ids) if isinstance(ids, list) else ids.count()
-             for ids, _ in (_match_ids(spark, root, "c", f, driver=True)
-                            for f in flts)]
+             for ids in (_match_ids(spark, root, "c", f)[0].ids
+                         for f in flts)]
         for cap, want in ((5, False), (6, True)):
             try:
                 out = filtered_search_indexed(

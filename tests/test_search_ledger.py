@@ -14,19 +14,32 @@ import builtins
 import os
 
 import pytest
-from bob_vector_db_spark.operators import index, knn, upsert
-from bob_vector_db_spark.operators.filters import Filter, MatchAny
+from bob_vector_db_spark.operators import index, knn, strict, upsert
+from bob_vector_db_spark.operators.filters import (
+    Filter,
+    MatchAny,
+    filter_match_ids,
+)
 from bob_vector_db_spark.operators.payload_index import build_payload_index
-from bob_vector_db_spark.operators.query_api import query_points, search_points
+from bob_vector_db_spark.operators.query_api import (
+    count_points,
+    query_points,
+    search_points,
+)
 
-# route -> Spark jobs for the call plus one collect of its result
+# route -> Spark jobs for the call plus one collect of its result (when
+# the call returns a frame)
 LEDGER = {
     "ann_ivf": 6,
     "exact_dense": 4,
     "exact_multivector": 4,
     "filtered_payload_exact": 4,
     "filtered_payload_masked": 4,
+    "filtered_payload_strict": 4,
     "filtered_composed": 8,
+    "count_keyword": 0,
+    "check_filter": 0,
+    "filter_match_ids_fetch": 5,
     "query_points_by_id": 11,
 }
 
@@ -73,7 +86,9 @@ def _jobs(spark, group: str, call) -> int:
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        call().collect()
+        out = call()
+        if out is not None and hasattr(out, "collect"):
+            out.collect()
     finally:
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
@@ -99,9 +114,16 @@ def test_search_routes_job_ledger(spark, store):
             spark, root, "d", q, flt=flt, k=5),
         "filtered_payload_masked": lambda: search_points(
             spark, root, "dm", q, flt=flt, k=5),
+        "filtered_payload_strict": lambda: search_points(
+            spark, root, "d", q, flt=flt, k=5, strict=True),
         "filtered_composed": lambda: search_points(
             spark, root, "d", q, flt=flt, k=5, use_index="always",
             n_probe=2),
+        "count_keyword": lambda: count_points(spark, root, "d", flt=flt),
+        "check_filter": lambda: strict.check_filter(
+            spark, root, "d", flt, strict.StrictMode()),
+        "filter_match_ids_fetch": lambda: upsert.read_rows_for_ids(
+            spark, root, "d", filter_match_ids(spark, root, "d", flt)[0]),
         "query_points_by_id": lambda: query_points(
             spark, root, "d", query=3, k=5),
     }
