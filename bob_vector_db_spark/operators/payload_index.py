@@ -1522,28 +1522,22 @@ def filtered_search_indexed(spark: SparkSession, root: str, collection: str,
     plan; for non-selective filters prefer ``knn.search_collection`` with a
     pushed predicate (scanning beats fetching when most points match).
 
-    A keyword index with at most :data:`DRIVER_PROBE_CAP` posting rows in
-    the probed buckets resolves on the driver (:func:`_keyword_id_list`),
-    so ``max_candidates`` checks the list's length and no job runs
-    before the scoring action.  Otherwise the probe stays a Spark plan
+    The probe resolves as a filter leaf does (``filters._resolve``): on
+    the driver when it can, so ``max_candidates`` checks a list's length
+    and no job runs before the scoring action, else as a Spark plan
     whose count is one job.  Either way the candidates fetch their rows
     through :meth:`upsert.Candidates.fetch`."""
+    from .filters import Filter, _Plan, _resolve  # noqa: PLC0415
     from .knn import _resolve_search_space, knn_join  # noqa: PLC0415
-    from .upsert import Candidates, _version_of  # noqa: PLC0415
+    from .upsert import _version_of  # noqa: PLC0415
 
     meta, id_col, vector_name, metric = _resolve_search_space(
         root, collection, vector_name)
     imeta = _probe_meta(root, collection, column, False,
                         cur=_version_of(root, collection, meta))
-    ids = None
-    if imeta.get("index_type", "keyword") == "keyword":
-        ids = _keyword_id_list(
-            index_path(root, collection, _payload_index_name(column)),
-            imeta, values)
-    if ids is None:
-        ids = _payload_probe(spark, root, collection, column, values,
-                             imeta).select("id")
-    cands = Candidates(spark, root, collection, ids, meta)
+    cands = _resolve(spark, root, collection,
+                     _Plan([(column, values, "scalar")], Filter(), meta,
+                           {column: imeta}, {}), allow_stale=False)
     n_cand = cands.count()
     if n_cand > max_candidates:
         raise ValueError(

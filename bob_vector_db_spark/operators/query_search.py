@@ -97,7 +97,8 @@ def _filtered_rows(spark: SparkSession, root: str, collection: str, flt,
             f"use_payload_index='always' but no top-level must leaf of "
             f"the filter has a fresh payload index on {collection!r}; "
             f"build_payload_index the filtered column(s) or use 'auto'")
-    if cands is not None and cands.count() > max_candidates:
+    if cands is not None \
+            and cands.count(limit=max_candidates + 1) > max_candidates:
         if use_payload_index == "always":
             raise ValueError(
                 f"filter matches {cands.count()} > {max_candidates} points "
@@ -790,12 +791,13 @@ def scroll_points(spark: SparkSession, root: str, collection: str,
                 # selectivity guard (ADVICE r9): a non-selective id set
                 # would semi-join into every geometric widening round
                 # where the pushed-predicate scan wins outright.  The
-                # widening loop and the final page read the candidates
-                # several times, so they are held once first.
-                cands.materialize()
-                if cands.count() > max_candidates:
+                # bounded count reads at most max_candidates + 1 rows;
+                # only a set that passes is held (the widening loop and
+                # the final page read it several times).
+                if cands.count(limit=max_candidates + 1) > max_candidates:
                     routable = False
                 else:
+                    cands.materialize()
                     cand_ids = cands.frame()
         if routable:
             coll = read_collection(spark, root, collection)

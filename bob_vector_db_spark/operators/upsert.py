@@ -758,18 +758,28 @@ class Candidates:
                  ids, meta: dict | None = None):
         self.spark, self.root, self.collection = spark, root, collection
         self.ids, self.meta = ids, meta
-        self._n: int | None = None
+        self._n = len(ids) if isinstance(ids, list) else None
+        self._floor = 0  # a frame holds at least this many rows
         # True: rows held (a list, or a materialized frame); False: the
         # frame stayed lazy past the materialize cap; None: not tried
         self._held = True if isinstance(ids, list) else None
 
-    def count(self) -> int:
-        """The candidate count: free for a list, one job for a frame
-        (counted once)."""
-        if self._n is None:
-            self._n = (len(self.ids) if isinstance(self.ids, list)
-                       else self.ids.count())
-        return self._n
+    def count(self, limit: int | None = None) -> int:
+        """The candidate count, or ``min(count, limit)``: free for a
+        list, one job for a frame (an exact count is kept).  A guard
+        ``count(limit=m + 1) > m`` reads at most ``m + 1`` frame rows."""
+        if self._n is not None:
+            return self._n if limit is None else min(self._n, limit)
+        if limit is None:
+            self._n = self.ids.count()
+            return self._n
+        if self._floor < limit:
+            n = self.ids.limit(limit).count()
+            if n < limit:
+                self._n = n
+                return n
+            self._floor = n
+        return limit
 
     def materialize(self) -> bool:
         """Hold the ids before several consumers read them: a Spark

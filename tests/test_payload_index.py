@@ -1434,6 +1434,26 @@ def test_keyset_route_respects_max_candidates(spark, tmp_path,
     assert not calls  # guard declined the keyset route
     assert [(r["v"], r["id"]) for r in page2.collect()] == want and want
 
+    # the same decline when the candidates stay a Spark probe frame (a
+    # probe over DRIVER_PROBE_CAP): the guard counts at most
+    # max_candidates + 1 rows and holds nothing on the driver
+    monkeypatch.setattr(payload_index, "DRIVER_PROBE_CAP", 0)
+    counts, held = [], []
+    real_count, real_mat = upsert.Candidates.count, upsert.materialize_small
+
+    def count_spy(self, limit=None):
+        counts.append(limit)
+        return real_count(self, limit)
+
+    monkeypatch.setattr(upsert.Candidates, "count", count_spy)
+    monkeypatch.setattr(upsert, "materialize_small",
+                        lambda *a, **k: held.append(1) or real_mat(*a, **k))
+    page3 = query_api.scroll_points(spark, root, "c", flt=flt, limit=5,
+                                    order_by="v", start_from=20.0,
+                                    max_candidates=10)
+    assert [(r["v"], r["id"]) for r in page3.collect()] == want
+    assert not calls and not held and counts and set(counts) == {11}
+
 
 def test_text_index_stopwords_and_stemmer(spark, tmp_path):
     """Round 10 (VERDICT r9 missing #2): TextIndexParams stopwords +
